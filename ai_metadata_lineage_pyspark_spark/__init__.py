@@ -7,7 +7,6 @@ reference repo at /root/reference is used only as a behavioral spec
 
 Layout:
   session.py    — tuned SparkSession builder (AQE, shuffle partitions, Arrow)
-  catalog.py    — typed loaders for the parquet fixture tables
   registry.py   — (name -> spark query, oracle SQL) registry used by
                   __spark_entry__.py and bench.py
   operators/    — relational + training-data operators (dedup, similarity,
@@ -15,7 +14,9 @@ Layout:
   lineage/      — the reference's engine-internal surface re-expressed as
                   Spark jobs (AST extraction, edges, stitching, corpus, QA)
   sources/      — script-corpus sources (read a repo of .py files as a table)
-  functions/    — reusable column-level helpers (JVM-side first)
+  functions/    — reusable column-level helpers (JVM-side first);
+                  functions/io.py owns every fixture-table read (one
+                  schema inference per table path per process)
   streaming/    — Structured Streaming equivalents (sessionization)
 """
 

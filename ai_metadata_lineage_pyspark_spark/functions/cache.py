@@ -15,13 +15,23 @@ wants a completely clean session (tests assert this) calls
 `spark.catalog.clearCache()` is NOT a substitute: it clears the persist
 flag on every live DataFrame, so a later re-collect of a still-referenced
 upstream DF silently recomputes instead of re-caching.
+
+Streaming results follow the same scope: every memory-sink table that
+streaming/sessions.run_to_memory registers goes through
+`scoped_stream_view`, and `release_persisted()` drops it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _PERSISTED: list[DataFrame] = []
+
+# `stream_result_*` temp views over memory sinks, whose rows live on the
+# driver. A returned result DataFrame keeps its already-resolved plan, so it
+# stays readable after its view is dropped; the rows are freed once the
+# caller lets go of it too.
+_STREAM_VIEWS: list[tuple[SparkSession, str]] = []
 
 # Cross-query memo for expensive shared subgraphs (e.g. the near-dup
 # component table consumed by BOTH `neardup_components` and
@@ -48,6 +58,11 @@ _MEMO: dict[tuple, DataFrame] = {}
 # query. `release_models()` ends the scope explicitly (bench calls it after
 # each suite; a fixture swap under the same sf_dir path is out of contract,
 # as for _MEMO).
+#
+# A third tier lives in functions/io.py: `_SCHEMAS`, one fixture table's
+# inferred StructType per path, so every read after the first runs no
+# schema-inference job. It holds no executor storage either, lasts the
+# whole process and is cleared by neither release call.
 _MODEL_MEMO: dict[tuple, DataFrame] = {}
 
 
@@ -85,12 +100,20 @@ def memo_put(key: tuple, df: DataFrame) -> DataFrame:
     return df
 
 
+def scoped_stream_view(spark: SparkSession, name: str) -> None:
+    """Register a streaming memory-sink view so a later caller can drop it."""
+    _STREAM_VIEWS.append((spark, name))
+
+
 def release_persisted() -> None:
-    """Unpersist every DataFrame registered via scoped_persist and drop
-    cross-query memos."""
+    """Unpersist every DataFrame registered via scoped_persist, drop the
+    registered stream-result views and drop cross-query memos."""
     _MEMO.clear()
     while _PERSISTED:
         _PERSISTED.pop().unpersist()
+    while _STREAM_VIEWS:
+        spark, name = _STREAM_VIEWS.pop()
+        spark.catalog.dropTempView(name)
 
 
 def persist_scope_mark() -> int:

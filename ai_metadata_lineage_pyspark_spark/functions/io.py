@@ -9,12 +9,32 @@ same two-column contract either way — `ts_us` as epoch-microseconds BIGINT
 and `ts` as TIMESTAMP_NTZ. Everything is pinned to UTC semantics so results
 are independent of the host/session timezone and line up with the DuckDB
 oracle's naive timestamps (`epoch_us(CAST(ts AS TIMESTAMP))`).
+
+This module owns every read of a fixture table. `spark.read.parquet(path)`
+runs a schema-inference Spark job on each call, although a fixture's schema
+never changes within a process. So the first read of a path infers its
+schema once and stores the `StructType` in `_SCHEMAS`, and every read pins
+the stored schema with `spark.read.schema(s).parquet(path)`, which runs no
+job.
+
+* Key: the table path alone. `ensure_engine_confs` pins `nanosAsLong` right
+  before every read, so that setting cannot differ between the read that
+  inferred a schema and a later memoized one.
+* Lifetime: the process. The memo holds one driver-side `StructType` per
+  path read and no executor storage, so, like the fitted-model tier in
+  functions/cache.py, `release_persisted()` leaves it alone.
+* Contract: rewriting a fixture in place under the same path with a
+  different schema is out of contract, as it already is for the cross-query
+  `_MEMO` in functions/cache.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+_SCHEMAS: dict[str, StructType] = {}
 
 
 def ensure_engine_confs(spark: SparkSession) -> None:
@@ -59,17 +79,31 @@ def normalize_events_ts(df: DataFrame, ntz: bool = True) -> DataFrame:
     return out.withColumn("ts", ts)
 
 
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """Schema of fixture table `name`, inferred on the first call per path
+    and served from `_SCHEMAS` after that (see the module docstring)."""
+    ensure_engine_confs(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _SCHEMAS.get(path)
+    if schema is None:
+        schema = _SCHEMAS[path] = spark.read.parquet(path).schema
+    return schema
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    schema = table_schema(spark, sf_dir, name)
+    return spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+
+
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with `ts` as TIMESTAMP_NTZ and `ts_us` as epoch-microseconds."""
-    ensure_engine_confs(spark)
-    return normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return normalize_events_ts(_read_table(spark, sf_dir, "events"))
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return load_events(spark, sf_dir)
-    ensure_engine_confs(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_table(spark, sf_dir, name)
 
 
 def _parse_bytes(conf_value: str) -> int:

@@ -158,11 +158,14 @@ def build_evidence(
             else impacted_scripts.union(scripts_all).distinct()
         )
     if impacted_scripts is not None:
-        names = sorted(
-            r.script_name for r in impacted_scripts.limit(MAX_SCRIPTS_SHOW).collect()
-        )
+        # order, then cap: a cap before the sort would list an arbitrary
+        # subset once the set outgrows it
+        names = [
+            r.script_name
+            for r in impacted_scripts.orderBy("script_name").limit(MAX_SCRIPTS_SHOW).collect()
+        ]
         sections.append(f"IMPACTED SCRIPTS ({len(names)}): {', '.join(names)}")
         gold = gold_outputs(assets, impacted_scripts)
-        paths = sorted(r.path for r in gold.limit(MAX_GOLD_SHOW).collect())
+        paths = [r.path for r in gold.orderBy("path").limit(MAX_GOLD_SHOW).collect()]
         sections.append(f"GOLD OUTPUTS ({len(paths)}): {', '.join(paths)}")
     return re.sub(r"[ \t]+", " ", "\n".join(sections))

@@ -84,10 +84,11 @@ def iter_checkpoint(df, eager: bool = True):
     `DataFrame.checkpoint()` on the checkpoint filesystem
     (SPARK_GRAFT_CHECKPOINT_DIR → HDFS/S3), so an executor loss mid-
     iteration replays from the last round's files instead of failing the
-    job. The incremental BPE fit uses reliable checkpoints UNCONDITIONALLY
-    (its round state is the model being fitted); everything else keeps the
-    local default because the swap is a deploy-time decision, not a
-    per-operator one.
+    job. The incremental and batched BPE fits reliably checkpoint their
+    distributed vocab table UNCONDITIONALLY, every few rounds; their pair
+    counts and merges live on the driver and are not checkpointed.
+    Everything else keeps the local default because the swap is a
+    deploy-time decision, not a per-operator one.
     """
     if os.environ.get("SPARK_GRAFT_RELIABLE_CKPT") == "1":
         ensure_checkpoint_dir(df.sparkSession)

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.io import ensure_engine_confs
+from ..functions.io import load, table_schema
 from ..operators.decontam import _BLOOM_K, _BLOOM_M_SMALL, _EVAL_MOD
 from ..operators.dedup import _SHINGLES_FROM_TOKS, _SQL_SHINGLES, _SQL_TOKENS, _TOKENS
 from ..registry import register
@@ -57,10 +57,10 @@ def _km_pos_duck(i: int) -> str:
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents fixture (schema pinned from a
-    batch read; glob form for the file source's basePath derivation)."""
-    ensure_engine_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    """File-source stream over the documents fixture (schema pinned from the
+    batch reader's memo; glob form for the file source's basePath
+    derivation)."""
+    schema = table_schema(spark, sf_dir, "documents")
     return spark.readStream.schema(schema).parquet(f"{sf_dir}/documents*.parquet")
 
 
@@ -72,7 +72,7 @@ def _bloom_bits(spark: SparkSession, sf_dir: str) -> str:
     streaming expression — the broadcast-tiny-state pattern a real ingest
     gate uses. Collect volume <= 3 x eval shingles, output exactly m chars.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load(spark, sf_dir, "documents")
     pos_exprs = ", ".join(_km_pos_spark("shingle", i) for i in range(_BLOOM_K))
     rows = (
         docs.filter(F.col("doc_id") % _EVAL_MOD == 0)

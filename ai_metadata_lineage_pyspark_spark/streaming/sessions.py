@@ -6,7 +6,7 @@ batch (examples/script_06_web_sessionization.py:13-38). This module provides
 the streaming path the reference lacks, Spark-first:
 
 * file-source `readStream` over the events parquet (schema pinned from the
-  batch reader, nanos normalized exactly like functions/io.load_events);
+  batch reader's memo, nanos normalized exactly like functions/io.load_events);
 * `session_window` gap-sessionization with a watermark — the streaming
   equivalent of the batch lag/cumsum pattern in operators/windows.py;
 * tumbling-window counts with a watermark;
@@ -38,7 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..functions.io import ensure_engine_confs, normalize_events_ts
+from ..functions.cache import scoped_stream_view
+from ..functions.io import normalize_events_ts, table_schema
 from ..operators.behavior import _TRANSITION_ORACLE
 from ..operators.merge import _SCD2_ORACLE
 from ..registry import register
@@ -50,9 +51,7 @@ _RUN_IDS = itertools.count()
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events fixture with the same type-adaptive
     ts normalization as the batch loader (functions/io.normalize_events_ts)."""
-    ensure_engine_confs(spark)
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = table_schema(spark, sf_dir, "events")
     # glob form: the file source derives basePath from the glob's parent dir
     # (a bare file path fails the "basePath must be a directory" check)
     raw = spark.readStream.schema(schema).parquet(f"{sf_dir}/events*.parquet")
@@ -64,7 +63,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def run_to_memory(stream: DataFrame, output_mode: str) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into a
-    uniquely-named memory sink and return the result table."""
+    uniquely-named memory sink and return the result table. The sink's view
+    is scoped like a persist: the next `release_persisted()` drops it."""
     # counter + uuid: unique within the session AND across module reloads /
     # concurrent harness invocations sharing one session
     name = f"stream_result_{next(_RUN_IDS)}_{uuid.uuid4().hex[:8]}"
@@ -76,6 +76,7 @@ def run_to_memory(stream: DataFrame, output_mode: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
+    scoped_stream_view(stream.sparkSession, name)
     return stream.sparkSession.table(name)
 
 

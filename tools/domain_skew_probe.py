@@ -46,6 +46,7 @@ from ai_metadata_lineage_pyspark_spark.operators.curation import (  # noqa: E402
     _DOMAIN_SALT,
     _domain_cap_stages,
 )
+from ai_metadata_lineage_pyspark_spark.functions.io import load  # noqa: E402
 from ai_metadata_lineage_pyspark_spark.registry import all_queries  # noqa: E402
 from ai_metadata_lineage_pyspark_spark.session import get_spark  # noqa: E402
 
@@ -56,7 +57,7 @@ OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/domain_skew_probe"
 def build(spark, src_dir: str, dst_dir: str, copies: int) -> None:
     """`copies` stacked corpus replicas; in each, doc_id % 2 == 0 docs are
     reassigned to the shared `hotdomain` source (~50% of the corpus)."""
-    docs = spark.read.parquet(f"{src_dir}/documents.parquet")
+    docs = load(spark, src_dir, "documents")
     parts = []
     for r in range(copies):
         parts.append(
@@ -102,7 +103,7 @@ def probe(spark, label: str, sf_dir: str, value_check: bool) -> None:
     q = all_queries()["domain_doc_cap"]
     rec = {
         "fixture": label,
-        "n_docs": spark.read.parquet(f"{sf_dir}/documents.parquet").count(),
+        "n_docs": load(spark, sf_dir, "documents").count(),
         "cap_x_salt": _DOMAIN_CAP * _DOMAIN_SALT,
         "top_sources": {r["source"]: r["count"] for r in src_counts},
         "n_sources": surv["n_sources"],

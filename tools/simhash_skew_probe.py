@@ -44,6 +44,7 @@ from ai_metadata_lineage_pyspark_spark.operators.dedup import (  # noqa: E402
 from ai_metadata_lineage_pyspark_spark.functions.cache import (  # noqa: E402
     release_persisted,
 )
+from ai_metadata_lineage_pyspark_spark.functions.io import load  # noqa: E402
 from ai_metadata_lineage_pyspark_spark.registry import all_queries  # noqa: E402
 from ai_metadata_lineage_pyspark_spark.session import get_spark  # noqa: E402
 
@@ -59,7 +60,7 @@ def build(spark, src_dir: str, dst_dir: str, copies: int) -> None:
     """`copies` stacked corpus replicas; in each, doc_id % 5 == 0 docs are
     the shared template + a doc-unique tail. Replica doc_ids are strided
     by 10M (the build_replica_fixture convention)."""
-    docs = spark.read.parquet(f"{src_dir}/documents.parquet")
+    docs = load(spark, src_dir, "documents")
     parts = []
     for r in range(copies):
         hot = F.concat(
@@ -101,7 +102,7 @@ def probe(spark, label: str, sf_dir: str) -> None:
     release_persisted()
     rec = {
         "fixture": label,
-        "n_docs": spark.read.parquet(f"{sf_dir}/documents.parquet").count(),
+        "n_docs": load(spark, sf_dir, "documents").count(),
         "bucket_cap": _BUCKET_CAP,
         "n_buckets": bstats["n_buckets"],
         "max_bucket": bstats["max_bucket"],

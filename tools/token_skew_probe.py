@@ -26,6 +26,7 @@ import time
 
 sys.path.insert(0, ".")
 
+from ai_metadata_lineage_pyspark_spark.functions.io import load  # noqa: E402
 from ai_metadata_lineage_pyspark_spark.registry import all_queries  # noqa: E402
 from ai_metadata_lineage_pyspark_spark.session import get_spark  # noqa: E402
 
@@ -58,7 +59,7 @@ def build_adversarial(spark, src_dir: str, dst_dir: str, hot_frac_mod: int = 10)
         dst = os.path.join(dst_dir, f"{t}.parquet")
         if not os.path.exists(dst):
             shutil.copy(os.path.join(src_dir, f"{t}.parquet"), dst)
-    docs = spark.read.parquet(f"{src_dir}/documents.parquet")
+    docs = load(spark, src_dir, "documents")
     spam = " ".join(["spark"] * 120)
     hot = F.concat(F.lit(spam + " tail"), F.col("doc_id").cast("string"))
     # two skew layers: 10% of docs become pure hot-token spam, AND every
