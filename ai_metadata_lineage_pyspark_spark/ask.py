@@ -25,19 +25,30 @@ Driver-side by design: every per-question computation is bounded by the
 same caps as the batch queries (MAX_IMPACT_SHOW etc.), so the collect()s
 here are O(caps), not O(corpus) — the heavy lifting (extraction, graph
 closure, embedding, top-k) stays in Spark jobs.
+
+The first ask() of a session also prepares the lineage graph
+(graphqa.prepare_graph): it collects the known-column set and lineage-cuts
+the column graph, its one- and two-hop edge lists and the stitched script
+edge list. On the perfbench lineage repository (24 scripts, 4-core host,
+warm JVM) that is a one-off ~0.4 s and 12 Spark jobs. Every ask then runs
+retrieval (4 jobs) and, when the question names known columns, one
+multi-seed column closure, one reasons query, one script closure and the
+script and gold-output lists over that state: 34-35 jobs in all for one
+column, 39 for two.
 """
 
 from __future__ import annotations
 
 import sys
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .lineage.embed import TOP_K, embed_documents, hash_embed, retrieve_top_k
 from .lineage.enrich import MockModelClient, ModelClient, answer_question
 from .lineage.extract import assets_table, columns_table, dataframes_table
-from .lineage.graphqa import build_evidence
+from .lineage.graphqa import LineageGraph, build_evidence, prepare_graph
 from .lineage.postprocess import edges_table
 from .session import get_spark
 
@@ -48,7 +59,10 @@ RETRIEVAL_SHOW = 10
 class QASession:
     """Extracted lineage tables + embedded corpus, built once per process
     (the reference loads outputs/ + the FAISS store once at startup,
-    qa/ask.py:462-471); each ask() is then a handful of bounded Spark jobs."""
+    qa/ask.py:462-471). The first ask() prepares the lineage graph over them
+    (known columns, lineage-cut column and script edge lists) and keeps it
+    for the session; every ask() then only runs its own closures and
+    lookups (see the module docstring for job counts)."""
 
     columns: DataFrame
     edges: DataFrame
@@ -56,6 +70,11 @@ class QASession:
     corpus: DataFrame
     embedded: DataFrame
     client: ModelClient = field(default_factory=MockModelClient)
+
+    @cached_property
+    def lineage(self) -> LineageGraph:
+        """The prepared lineage graph, built on first use."""
+        return prepare_graph(self.columns, self.edges, self.assets)
 
     @classmethod
     def build(cls, spark: SparkSession, client: ModelClient | None = None) -> "QASession":
@@ -87,7 +106,7 @@ class QASession:
     def ask(self, question: str) -> dict:
         """One Q&A round: returns answer + evidence + debug counters."""
         hits = self.retrieve(question)
-        det_evidence = build_evidence(question, self.columns, self.edges, self.assets)
+        det_evidence = build_evidence(question, self.lineage)
         doc_lines = [
             f"DOC {i} [{ref}]: {text}" for i, (ref, text) in enumerate(hits[:RETRIEVAL_SHOW], 1)
         ]

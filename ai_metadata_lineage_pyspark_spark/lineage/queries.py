@@ -245,13 +245,12 @@ def lineage_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     impacted scripts / gold outputs; qa/ask.py:226-244, 391-450). The LLM
     answer step (A38) stays behind the pluggable client — deterministic
     evidence never depends on it (README.md:111-113 rule)."""
-    from .graphqa import build_evidence
+    from .graphqa import build_evidence, prepare_graph
 
     facts = _facts(spark)
     cols, dfs = columns_table(facts), dataframes_table(facts)
-    evidence = build_evidence(
-        _EVIDENCE_QUESTION, cols, edges_table(cols, dfs), assets_table(facts)
-    )
+    lineage = prepare_graph(cols, edges_table(cols, dfs), assets_table(facts))
+    evidence = build_evidence(_EVIDENCE_QUESTION, lineage)
     rows = [(i, line) for i, line in enumerate(evidence.split("\n"), 1)]
     return spark.createDataFrame(rows, "line_no int, line string")
 
@@ -371,12 +370,12 @@ _GOLD_GOLDEN = [
 
 def _impacted_scripts(spark: SparkSession):
     """seed scripts for _IMPACT_COLUMN (A35) ∪ downstream closure (A33)."""
-    from .graphqa import downstream_scripts, seed_scripts
+    from .graphqa import downstream_scripts, script_edges, seed_scripts
 
     facts = _facts(spark)
     assets = assets_table(facts)
-    seeds = seed_scripts(columns_table(facts), _IMPACT_COLUMN)
-    down = downstream_scripts(assets, seeds)
+    seeds = seed_scripts(columns_table(facts), [_IMPACT_COLUMN])
+    down = downstream_scripts(script_edges(assets), seeds)
     scripts = seeds.select(F.col("seed").alias("script_name")).union(down).distinct()
     return assets, scripts
 
@@ -410,11 +409,11 @@ def lineage_downstream_scripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A32/A33/A35: seed-script lookup for a candidate column + iterative
     script-level BFS over the stitched asset graph (qa/ask.py:295-340),
     checked against a DuckDB recursive CTE over the same seed rule + links."""
-    from .graphqa import downstream_scripts, seed_scripts
+    from .graphqa import downstream_scripts, script_edges, seed_scripts
 
     facts = _facts(spark)
-    seeds = seed_scripts(columns_table(facts), _IMPACT_COLUMN)
-    return downstream_scripts(assets_table(facts), seeds)
+    seeds = seed_scripts(columns_table(facts), [_IMPACT_COLUMN])
+    return downstream_scripts(script_edges(assets_table(facts)), seeds)
 
 
 @register(
@@ -451,14 +450,12 @@ def lineage_gold_outputs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lineage_column_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A31: downstream column closure — iterative frontier BFS on Spark
     checked against DuckDB's recursive CTE over the same edge list."""
-    from .graphqa import column_closure, column_graph
+    from .graphqa import column_closure, column_edges, column_graph
 
     facts = _facts(spark)
     edges = edges_table(columns_table(facts), dataframes_table(facts))
-    graph = column_graph(edges)
-    return column_closure(graph, _CLOSURE_SEED).withColumn(
-        "depth", F.col("depth").cast("int")
-    )
+    closure = column_closure(column_edges(column_graph(edges)), [_CLOSURE_SEED])
+    return closure.select("impacted_col", F.col("depth").cast("int").alias("depth"))
 
 
 # --- plan-based lineage (SURVEY.md §4 Spark-native path, added r7) ----------

@@ -843,6 +843,12 @@ def _neardup_oracle() -> str:
 _MAX_CC_ITERS = 20
 
 
+class ComponentsNotConverged(RuntimeError):
+    """Min-label propagation hit `_MAX_CC_ITERS` rounds with labels still
+    moving: the labels would be wrong for any component whose diameter
+    exceeds the rounds run, so none are returned."""
+
+
 @register(
     "neardup_components",
     oracle=f"""
@@ -1005,7 +1011,11 @@ def neardup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _min_label_components(pairs: DataFrame) -> DataFrame:
-    """Iterative min-label propagation over an undirected pair list."""
+    """Iterative min-label propagation over an undirected pair list.
+
+    Raises ComponentsNotConverged when a label still moves in the last of
+    `_MAX_CC_ITERS` rounds: each round carries a label one hop, so a path
+    of more than `_MAX_CC_ITERS` + 1 nodes needs more rounds than run."""
     # undirected edge list, materialized once (it is consumed every round).
     # Both orientations come from ONE pass over the pair subtree — the
     # previous pairs.union(pairs.swapped) form evaluated the entire
@@ -1074,8 +1084,11 @@ def _min_label_components(pairs: DataFrame) -> DataFrame:
         changed = flagged.where("lowered").count()
         labels = flagged.select("doc_id", "label")
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise ComponentsNotConverged(
+        f"min-label propagation still lowered {changed} labels in round "
+        f"{_MAX_CC_ITERS}: a component is wider than the round cap allows"
+    )
 
 
 @register("embedding_lsh_neardup", oracle=_neardup_oracle())

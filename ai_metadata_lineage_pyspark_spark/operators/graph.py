@@ -5,7 +5,9 @@ This is the Spark-native form of the reference's genuinely recursive
 operators (qa/ask.py:211-223 `downstream_closure`, :325-340
 `bfs_downstream_scripts`): Spark has no recursive CTE, so the closure is a
 driver loop of frontier joins with early termination. The same helper powers
-the lineage-engine column/script closures in `..lineage.graphqa`.
+the lineage-engine column/script closures in `..lineage.graphqa`, which cut
+each edge list once (`prepare_edges`) and run every closure of a Q&A
+session over it.
 
 Scale notes: each hop is one shuffle join keyed on the edge source; the
 frontier is deduplicated per hop so work is proportional to newly reached
@@ -18,39 +20,46 @@ mode).
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.io import load
 from ..registry import register
-from ..session import iter_checkpoint
+from ..session import counted_checkpoint, iter_checkpoint, release_checkpoint
 
 
-def bfs_closure(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_depth: int = 6,
-    src: str = "src",
-    dst: str = "dst",
-    two_hop: bool = False,
-) -> DataFrame:
-    """Bounded-depth min-depth closure.
+@dataclass(frozen=True)
+class PreparedEdges:
+    """A closure's edge list, lineage-cut once and reusable by any number
+    of `bfs_closure` calls over it.
 
-    edges: (src, dst). seeds: (seed,) — seed node ids.
-    Returns (seed, node, depth) with the minimum depth ≤ max_depth at which
-    `node` is reachable from `seed` (depth ≥ 1; seeds themselves excluded,
-    mirroring qa/ask.py:211-223 which yields only downstream nodes).
+    edges: (__bfs_src, __bfs_dst), checkpointed.
+    two_hop: the deduplicated pairs joined by paths of length exactly 2,
+    checkpointed, or None when the closure expands one hop per round.
+    """
 
-    Iteration discipline (the classic iterative-Spark failure modes, both
-    handled here):
-    * the edge list is lineage-cut (iter_checkpoint) ONCE up front — otherwise every hop
-      re-executes the full upstream plan that produced it (for lineage
-      closures that plan includes the AST-extraction UDF; for event chains a
-      window over the whole table);
-    * each frontier is lineage-cut — the emptiness probe and the next
-      hop's join then read materialized partitions instead of recursively
-      recomputing join(join(join(...))), which otherwise grows the lineage
-      (and runtime) exponentially with depth.
+    edges: DataFrame
+    two_hop: DataFrame | None
+
+
+# Largest |e2| / |edges| ratio at which the two-hop list is kept. |e2| is
+# sum(indeg(v) * outdeg(v)) before deduplication, so one hub node can make
+# it quadratic; above this ratio a round would scan more than (1 + ratio)
+# edge lists to save one round, and the closure falls back to 1-hop.
+_E2_MAX_RATIO = 4
+
+
+def prepare_edges(edges: DataFrame, two_hop: bool = False) -> PreparedEdges:
+    """Lineage-cut the (src, dst) edge list of a closure (and build its
+    two-hop list).
+
+    The cut matters because every hop reads the edge list: without it each
+    hop re-executes the full upstream plan that produced it (for lineage
+    closures that plan includes the AST-extraction UDF; for event chains a
+    window over the whole table). Each cut is counted by the job that
+    materializes it, so the two-hop size guard costs no job.
 
     two_hop (r15): expand the frontier by 1 AND 2 hops per round over a
     once-materialized doubled edge list, halving the round count (and the
@@ -60,37 +69,61 @@ def bfs_closure(
     at sf1, event_chain_closure (6 full hops) 4.75s -> 4.37s steady with
     jobs 42 -> 27, but lineage_downstream_scripts (terminates in ~2 hops)
     regressed 1.54s -> 2.31s — the e2 build is pure overhead for closures
-    that die early (ARTIFACTS/r15 measurements; guide §1.2, §7.3).
+    that die early (ARTIFACTS/r15 measurements; guide §1.2, §7.3). A caller
+    that asks many closures over one edge list pays it once.
     """
-    edges = iter_checkpoint(
-        edges.select(F.col(src).alias("__bfs_src"), F.col(dst).alias("__bfs_dst"))
+    e1, n_edges = counted_checkpoint(
+        edges.select(F.col("src").alias("__bfs_src"), F.col("dst").alias("__bfs_dst"))
     )
-    e2 = None
-    if two_hop:
-        # TWO-HOP frontier expansion (r15, guide §7.3): deep closures are
-        # driver-latency-bound at bench scale (r15 opt_measure: 42 jobs,
-        # 1.2s of job wall inside a 2.2s steady run), so halving the round
-        # count beats minimizing per-round work. One up-front edge doubling
-        # — e2 = all (src, dst) joined by paths of length exactly 2,
-        # deduplicated — lets each round expand the frontier by BOTH 1 and
-        # 2 hops; per-(seed, node) min(depth) inside the round plus the
-        # existing anti-join against `reached` preserves exact min-depth
-        # semantics (shortest-path prefix induction: a node of min-depth d
-        # has its d-1 / d-2 prefix in the previous round's frontier, so
-        # e1/e2 always supply a candidate at the true min depth). The r12
-        # two-hop REJECTION was for clique-shaped LSH components, where
-        # hop-0 already converges; deep BFS closures (event chains are
-        # paths) are the opposite shape, and e2 stays edge-scale rather
-        # than exploding quadratically.
-        e2 = iter_checkpoint(
-            edges.alias("x")
-            .join(edges.alias("y"), F.col("x.__bfs_dst") == F.col("y.__bfs_src"))
-            .select(
-                F.col("x.__bfs_src").alias("__bfs_src"),
-                F.col("y.__bfs_dst").alias("__bfs_dst"),
-            )
-            .distinct()
+    if not two_hop:
+        return PreparedEdges(e1, None)
+    # TWO-HOP frontier expansion (r15, guide §7.3): deep closures are
+    # driver-latency-bound at bench scale (r15 opt_measure: 42 jobs, 1.2s of
+    # job wall inside a 2.2s steady run), so halving the round count beats
+    # minimizing per-round work. One up-front edge doubling — e2 = all
+    # (src, dst) joined by paths of length exactly 2, deduplicated — lets
+    # each round expand the frontier by BOTH 1 and 2 hops; per-(seed, node)
+    # min(depth) inside the round plus the anti-join against `reached`
+    # preserves exact min-depth semantics (shortest-path prefix induction: a
+    # node of min-depth d has its d-1 / d-2 prefix in the previous round's
+    # frontier, so e1/e2 always supply a candidate at the true min depth).
+    # The r12 two-hop REJECTION was for clique-shaped LSH components, where
+    # hop-0 already converges; deep BFS closures (event chains are paths)
+    # are the opposite shape. A hub node makes e2 quadratic, which the size
+    # guard below catches.
+    e2, n_e2 = counted_checkpoint(
+        e1.alias("x")
+        .join(e1.alias("y"), F.col("x.__bfs_dst") == F.col("y.__bfs_src"))
+        .select(
+            F.col("x.__bfs_src").alias("__bfs_src"),
+            F.col("y.__bfs_dst").alias("__bfs_dst"),
         )
+        .distinct()
+    )
+    if n_e2 > _E2_MAX_RATIO * n_edges:
+        release_checkpoint(e2)
+        return PreparedEdges(e1, None)
+    return PreparedEdges(e1, e2)
+
+
+def bfs_closure(prepared: PreparedEdges, seeds: DataFrame, max_depth: int = 6) -> DataFrame:
+    """Bounded-depth min-depth closure.
+
+    prepared: the edge list from `prepare_edges`. seeds: (seed,) — seed node
+    ids. Returns (seed, node, depth) with the minimum depth ≤ max_depth at
+    which `node` is reachable from `seed` (depth ≥ 1; seeds themselves
+    excluded, mirroring qa/ask.py:211-223 which yields only downstream
+    nodes). Each round expands the frontier by 1 hop, or by 1 and 2 hops
+    when `prepared` kept its two-hop list.
+
+    Iteration discipline (the classic iterative-Spark failure modes, both
+    handled here): the edge list is lineage-cut once, by `prepare_edges`;
+    each frontier is lineage-cut — the emptiness probe and the next hop's
+    join then read materialized partitions instead of recursively
+    recomputing join(join(join(...))), which otherwise grows the lineage
+    (and runtime) exponentially with depth.
+    """
+    edges, e2 = prepared.edges, prepared.two_hop
     # lazy cut: the combined count+width probe below materializes it, so the
     # seed frontier costs one job instead of checkpoint-then-count (r14 —
     # the whole closure is driver-latency-bound at bench scale: 51 jobs,
@@ -123,7 +156,7 @@ def bfs_closure(
     avg_node_width = probe["w"] or 8.0
     reached = frontier
     n_frontier = probe["n"]
-    step = 2 if two_hop else 1
+    step = 1 if e2 is None else 2
     for k in range(1, (max_depth + step - 1) // step + 1):
         f = frontier.alias("f")
         if n_frontier * (avg_node_width + row_overhead) <= broadcast_bytes:
@@ -135,7 +168,7 @@ def bfs_closure(
             F.col("e.__bfs_dst").alias("node"),
             (F.col("f.depth") + F.lit(1)).alias("depth"),
         )
-        if two_hop:
+        if e2 is not None:
             # expand by 1 AND 2 hops in one round; the frontier is an
             # already-materialized checkpoint, so both branches scan it
             # (and Spark reuses the single broadcast exchange) rather than
@@ -158,16 +191,13 @@ def bfs_closure(
         # frontier-wide constant, so min(depth) == the old distinct+lit)
         nxt = cand.groupBy("seed", "node").agg(F.min("depth").alias("depth"))
         # keep only newly discovered (seed, node) pairs -> min-depth semantics.
-        # Lazy cut + count: the emptiness probe is the first action over the
-        # checkpointed RDD, so materialization and the count share one job
-        # (the hop previously paid checkpoint-then-count = two driver round
-        # trips; across the rounds that halves the closure's job count)
-        nxt = iter_checkpoint(
+        # The emptiness probe counts the checkpoint's rows as it materializes
+        # them, so the cut and the count share one job (the hop previously
+        # paid checkpoint-then-count = two driver round trips)
+        nxt, n_frontier = counted_checkpoint(
             nxt.join(reached.select("seed", "node"), ["seed", "node"], "left_anti")
-            .select("seed", "node", "depth"),
-            eager=False,
+            .select("seed", "node", "depth")
         )
-        n_frontier = nxt.count()
         if n_frontier == 0:
             break
         reached = reached.unionByName(nxt)
@@ -213,7 +243,7 @@ def event_chain_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two_hop: the chain closure always runs its full 6 hops (path graph),
     # the shape where halved rounds beat the one-off edge doubling (r15
     # sf1 A/B: 4.75s -> 4.37s steady, 42 -> 27 jobs)
-    return bfs_closure(edges, seeds, max_depth=6, two_hop=True)
+    return bfs_closure(prepare_edges(edges, two_hop=True), seeds, max_depth=6)
 
 
 # ---------------------------------------------------------------------------

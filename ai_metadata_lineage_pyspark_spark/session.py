@@ -10,8 +10,10 @@ semantics are stable and match the DuckDB oracle.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "ai-metadata-lineage-pyspark-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -89,8 +91,64 @@ def iter_checkpoint(df, eager: bool = True):
     counts and merges live on the driver and are not checkpointed.
     Everything else keeps the local default because the swap is a
     deploy-time decision, not a per-operator one.
+
+    Inside a `checkpoint_scope()` block the cut is also registered with the
+    innermost scope, which releases it when the block exits.
     """
     if os.environ.get("SPARK_GRAFT_RELIABLE_CKPT") == "1":
         ensure_checkpoint_dir(df.sparkSession)
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        cut = df.checkpoint(eager=eager)
+    else:
+        cut = df.localCheckpoint(eager=eager)
+    scopes = getattr(_SCOPES, "stack", None)
+    if scopes:
+        scopes[-1].append(cut)
+    return cut
+
+
+# Open checkpoint scopes of the current thread, innermost last: each is the
+# list of the checkpoints iter_checkpoint made while it was open.
+_SCOPES = threading.local()
+
+
+def _rows_rdd(cut: DataFrame):
+    """The JVM RDD that holds a checkpointed DataFrame's rows: its plan is
+    a single LogicalRDD over it."""
+    return cut._jdf.queryExecution().analyzed().rdd()
+
+
+def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """iter_checkpoint(df) and its row count, from the one job that
+    materializes it: counting the checkpoint's own RDD. A DataFrame
+    count() over the cut would plan an aggregation with an exchange, which
+    adaptive execution runs as a second job."""
+    cut = iter_checkpoint(df, eager=False)
+    return cut, _rows_rdd(cut).count()
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD that holds a checkpointed DataFrame's rows.
+
+    A checkpoint's blocks belong to an internal RDD that
+    `DataFrame.unpersist()` does not reach; left alone they stay cached
+    until the JVM collects the RDD, and py4j releases the Python side's
+    handle on it only from its finalizer thread, up to a second later."""
+    _rows_rdd(df).unpersist(False)
+
+
+@contextmanager
+def checkpoint_scope():
+    """Release, when the block exits, every checkpoint iter_checkpoint made
+    inside it on this thread. For iterative round state whose results the
+    block has collected before it exits (the closures of one lineage
+    question); DataFrames that still read those checkpoints must not be used
+    afterwards."""
+    stack = _SCOPES.__dict__.setdefault("stack", [])
+    made: list[DataFrame] = []
+    stack.append(made)
+    try:
+        yield
+    finally:
+        stack.pop()
+        for df in made:
+            release_checkpoint(df)

@@ -100,3 +100,36 @@ def test_capped_star_components_match_exact_on_duplicate_cluster(spark, tmp_path
     assert len(capped_pairs) < 100 < len(exact_pairs)  # O(k) vs O(k²)
     # ...but the components are identical
     assert capped_comp == exact_comp
+
+
+def test_min_label_components_raises_when_rounds_run_out(spark):
+    """A path of more than _MAX_CC_ITERS + 1 nodes still moves a label in the
+    last round: the components are not returned as if converged."""
+    import pytest
+
+    from ai_metadata_lineage_pyspark_spark.operators.dedup import (
+        _MAX_CC_ITERS,
+        ComponentsNotConverged,
+        _min_label_components,
+    )
+
+    def path(n):
+        return spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long")
+
+    # the longest path the rounds cover still converges ...
+    labels = _min_label_components(path(_MAX_CC_ITERS + 1)).collect()
+    assert {r.label for r in labels} == {0} and len(labels) == _MAX_CC_ITERS + 1
+    # ... one more node does not
+    with pytest.raises(ComponentsNotConverged):
+        _min_label_components(path(_MAX_CC_ITERS + 2))
+
+
+def test_min_label_components_converges_on_a_clique(spark):
+    from ai_metadata_lineage_pyspark_spark.operators.dedup import _min_label_components
+
+    nodes = [3, 5, 8, 13, 21]
+    pairs = spark.createDataFrame(
+        [(a, b) for a in nodes for b in nodes if a < b] + [(40, 41)], "doc_a long, doc_b long"
+    )
+    labels = {r.doc_id: r.label for r in _min_label_components(pairs).collect()}
+    assert labels == {**{n: 3 for n in nodes}, 40: 40, 41: 40}

@@ -3,11 +3,11 @@ multi-seed, depth cap."""
 
 from __future__ import annotations
 
-from ai_metadata_lineage_pyspark_spark.operators.graph import bfs_closure
+from ai_metadata_lineage_pyspark_spark.operators.graph import bfs_closure, prepare_edges
 
 
-def closure_dict(spark, edges, seeds, **kw):
-    e = spark.createDataFrame(edges, ["src", "dst"])
+def closure_dict(spark, edges, seeds, two_hop=False, **kw):
+    e = prepare_edges(spark.createDataFrame(edges, ["src", "dst"]), two_hop=two_hop)
     s = spark.createDataFrame([(x,) for x in seeds], ["seed"])
     rows = bfs_closure(e, s, **kw).collect()
     return {(r.seed, r.node): r.depth for r in rows}
@@ -73,3 +73,31 @@ def test_reliable_checkpoint_parity_registry_iteratives(spark, sf_dir, monkeypat
     monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CKPT", "1")
     durable = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
     assert durable == local and len(local) > 0
+
+
+def test_two_hop_rounds_match_one_hop_rounds(spark):
+    # a path keeps its two-hop list (|e2| = |edges| - 1), and expanding by
+    # 1 and 2 hops per round finds the same min depths, odd cap included
+    edges = [(str(i), str(i + 1)) for i in range(9)] + [("0", "5"), ("7", "2")]
+    e = prepare_edges(spark.createDataFrame(edges, ["src", "dst"]), two_hop=True)
+    assert e.two_hop is not None
+    for depth in (3, 6):
+        assert closure_dict(spark, edges, ["0", "6"], two_hop=True, max_depth=depth) == (
+            closure_dict(spark, edges, ["0", "6"], max_depth=depth)
+        )
+
+
+def test_hub_graph_falls_back_to_one_hop(spark):
+    # 12 writers -> hub -> 12 readers: 24 edges but 144 two-hop pairs, past
+    # the size guard, so the two-hop list is dropped and rounds take 1 hop
+    edges = (
+        [(f"w{i:02d}", "hub") for i in range(12)]
+        + [("hub", f"r{i:02d}") for i in range(12)]
+        + [("r00", "tail")]
+    )
+    e = prepare_edges(spark.createDataFrame(edges, ["src", "dst"]), two_hop=True)
+    assert e.two_hop is None
+    seeds = ["w00", "w07", "hub"]
+    got = closure_dict(spark, edges, seeds, two_hop=True)
+    assert got == closure_dict(spark, edges, seeds)
+    assert got[("w00", "tail")] == 3 and got[("hub", "r05")] == 1

@@ -1,14 +1,33 @@
-"""build_evidence caps its script and gold-output lists AFTER ordering them:
-above the cap it lists the first names in order, not an arbitrary subset."""
+"""build_evidence over a prepared lineage graph.
+
+It caps its script and gold-output lists AFTER ordering them: above the cap
+it lists the first names in order, not an arbitrary subset. A question's
+candidate columns share one multi-seed closure whose per-column lists are
+those of the single-column questions, and a QASession prepares the graph
+once and releases each ask's checkpoints when the ask returns.
+"""
 
 from __future__ import annotations
 
+import gc
+import itertools
 import re
+import time
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
+from ai_metadata_lineage_pyspark_spark.ask import QASession
+from ai_metadata_lineage_pyspark_spark.lineage import graphqa, stitch
 from ai_metadata_lineage_pyspark_spark.lineage.graphqa import (
     MAX_GOLD_SHOW,
+    MAX_IMPACT_SHOW,
     MAX_SCRIPTS_SHOW,
     build_evidence,
+    column_closure,
+    column_edges,
+    column_graph,
+    prepare_graph,
 )
 
 _N_WRITERS = 70  # > MAX_GOLD_SHOW gold paths, > MAX_SCRIPTS_SHOW scripts
@@ -47,7 +66,7 @@ def test_capped_lists_are_the_first_in_order(spark):
     assert len(writers) + len(readers) > MAX_SCRIPTS_SHOW
     assert len(writers) > MAX_GOLD_SHOW
 
-    evidence = build_evidence("what breaks if `amount` changes?", columns, edges, assets)
+    evidence = build_evidence("what breaks if `amount` changes?", prepare_graph(columns, edges, assets))
 
     assert "CANDIDATE COLUMNS: amount" in evidence
     assert _listed(evidence, "IMPACTED SCRIPTS") == sorted(writers + readers)[:MAX_SCRIPTS_SHOW]
@@ -61,7 +80,224 @@ def test_lists_below_the_caps_are_complete(spark):
     columns = columns.filter(columns.script_name.isin(few))
     assets = assets.filter(assets.script_name.isin(few))
 
-    evidence = build_evidence("what breaks if `amount` changes?", columns, edges, assets)
+    evidence = build_evidence("what breaks if `amount` changes?", prepare_graph(columns, edges, assets))
 
     assert _listed(evidence, "IMPACTED SCRIPTS") == ["s01", "s03", "z0"]
     assert _listed(evidence, "GOLD OUTPUTS") == ["s3a://lake/gold/t01/", "s3a://lake/gold/t03/"]
+
+
+# --- one multi-seed closure per question ------------------------------------
+
+_N_WIDE = MAX_IMPACT_SHOW + 5  # `amount` has more descendants than are shown
+
+
+def _wide_repo(spark):
+    """`amount` feeds _N_WIDE columns (one of them back into `amount`);
+    `fee` reaches one of them through `fee_usd`. Script `wide` holds the
+    `amount` columns, `fees` the `fee` ones, and `report` reads what `fees`
+    writes."""
+    wide = [f"d{i:02d}" for i in range(_N_WIDE)]
+    col_edges = (
+        [("wide", w, "amount", f"derive {w}") for w in wide]
+        + [("wide", "e0", "d00", "deeper"), ("wide", "amount", "d01", "cycle")]
+        + [("fees", "fee_usd", "fee", "convert"), ("fees", "fee_usd", "fee", "round")]
+        + [("fees", "d03", "fee_usd", "spill")]
+    )
+    edges = spark.createDataFrame(
+        col_edges, "script_name string, target_col string, src_col string, reason string"
+    )
+    columns = spark.createDataFrame(
+        [("wide", "amount", []), ("fees", "fee", []), ("fees", "fee_usd", ["fee"]),
+         ("report", "total", ["fee_usd"])]
+        + [("wide", w, ["amount"]) for w in wide],
+        "script_name string, col_name string, derived_from array<string>",
+    )
+    asset_rows = [
+        ("wide", "write", "s3a://lake/gold/wide/"),
+        ("fees", "write", "s3a://lake/silver/fees/"),
+        ("fees", "write", "s3a://lake/gold/fees/"),
+        ("report", "read", "s3a://lake/silver/fees/"),
+        ("report", "write", "s3a://lake/gold/report/"),
+    ]
+    assets = spark.createDataFrame(asset_rows, "script_name string, direction string, path string")
+    return col_edges, columns, edges, asset_rows, assets
+
+
+def _section(evidence: str, *prefixes: str) -> list[str]:
+    return [line for line in evidence.split("\n") if line.startswith(prefixes)]
+
+
+def _bfs(adj: dict, start: str, max_depth: int) -> list[tuple[int, str]]:
+    """(depth, node) of every node downstream of `start`, in show order."""
+    depth = {start: 0}
+    frontier = [start]
+    for d in range(1, max_depth + 1):
+        frontier = sorted({v for u in frontier for v in adj.get(u, ()) if v not in depth})
+        depth.update((v, d) for v in frontier)
+    return sorted((d, n) for n, d in depth.items() if n != start)
+
+
+def _scripts_column_by_column(col_rows, asset_rows, cands):
+    """IMPACTED SCRIPTS and GOLD OUTPUTS as a per-column evidence build lists
+    them: each column's seed scripts plus their downstream scripts, united."""
+    writer = {}
+    for script, direction, path in asset_rows:
+        if direction == "write":
+            key = path.rstrip("/")
+            writer[key] = max(writer.get(key, script), script)
+    links = {}
+    for script, direction, path in asset_rows:
+        w = writer.get(path.rstrip("/"))
+        if direction == "read" and w not in (None, script):
+            links.setdefault(w, set()).add(script)
+    scripts = set()
+    for c in cands:
+        seeds = {s for s, col, derived in col_rows if col == c or c in derived}
+        scripts |= seeds | {n for s in seeds for _, n in _bfs(links, s, 10)}
+    gold = sorted(
+        path for script, direction, path in asset_rows
+        if direction == "write" and script in scripts and "gold" in path.split("/")
+    )
+    return sorted(scripts)[:MAX_SCRIPTS_SHOW], gold[:MAX_GOLD_SHOW]
+
+
+def test_two_column_question_joins_the_single_column_answers(spark):
+    col_edges, columns, edges, asset_rows, assets = _wide_repo(spark)
+    lineage = prepare_graph(columns, edges, assets)
+
+    both = build_evidence("how do `amount` and `fee` reach the gold tables?", lineage)
+    amount = build_evidence("what breaks if `amount` changes?", lineage)
+    fee = build_evidence("what breaks if `fee` changes?", lineage)
+
+    per_column = ("COLUMN IMPACT", "ONE-HOP REASONS")
+    assert _section(both, *per_column) == _section(amount, *per_column) + _section(fee, *per_column)
+    adj = {}
+    for _, dst, src, _ in col_edges:
+        adj.setdefault(src, set()).add(dst)
+    shown = [n for _, n in _bfs(adj, "amount", 20)][:MAX_IMPACT_SHOW]
+    assert _section(amount, "COLUMN IMPACT") == [
+        f"COLUMN IMPACT amount -> ({MAX_IMPACT_SHOW}): {', '.join(shown)}"
+    ]
+    assert _section(fee, "ONE-HOP REASONS") == [
+        "ONE-HOP REASONS fee: fee -> fee_usd: convert | fee -> fee_usd: round"
+    ]
+    col_rows = [tuple(r) for r in columns.collect()]
+    names, gold = _scripts_column_by_column(col_rows, asset_rows, ["amount", "fee"])
+    assert _listed(both, "IMPACTED SCRIPTS") == names == ["fees", "report", "wide"]
+    assert _listed(both, "GOLD OUTPUTS") == gold
+
+
+_NODES = [f"c{i}" for i in range(7)]
+_CLOSURE_CAP = 3  # stands in for BFS_NODE_LIMIT, so random graphs reach it
+
+
+@given(
+    pairs=st.lists(st.tuples(st.sampled_from(_NODES), st.sampled_from(_NODES)), min_size=1, max_size=14),
+    seeds=st.lists(st.sampled_from(_NODES), min_size=1, max_size=3, unique=True),
+)
+@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_multi_seed_closure_is_the_union_of_single_seed_closures(spark, monkeypatch, pairs, seeds):
+    monkeypatch.setattr(graphqa, "BFS_NODE_LIMIT", _CLOSURE_CAP)
+    edges = spark.createDataFrame(
+        [("s", dst, src, "r") for src, dst in pairs],
+        "script_name string, target_col string, src_col string, reason string",
+    )
+    prepared = column_edges(column_graph(edges))
+
+    def by_seed(starts):
+        out = {}
+        for r in column_closure(prepared, starts).collect():
+            out.setdefault(r.seed, []).append((r.rank, r.depth, r.impacted_col))
+        return {s: sorted(v) for s, v in out.items()}
+
+    adj = {}
+    for src, dst in pairs:
+        if src != dst:
+            adj.setdefault(src, set()).add(dst)
+    union = {}
+    for s in seeds:
+        single = by_seed([s])
+        expected = _bfs(adj, s, 20)[:_CLOSURE_CAP]
+        assert single.get(s, []) == [(i, d, n) for i, (d, n) in enumerate(expected, 1)]
+        union.update(single)
+    assert by_seed(seeds) == union
+
+
+# --- the session-scoped graph -------------------------------------------------
+
+_GROUPS = itertools.count()
+_ASKS = (
+    "which columns derive from temp_c and what writes to gold alerts",
+    "what breaks if `device_id` changes",
+    "how do alert_score and n_readings flow into gold",
+)
+
+
+def _jobs_in(spark, fn):
+    """Run `fn()` under a fresh job group; return the number of Spark jobs
+    it submitted."""
+    sc = spark.sparkContext
+    group = f"graphqa-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_second_ask_reuses_the_prepared_graph(spark, monkeypatch):
+    qa = QASession.build(spark)
+    first = _jobs_in(spark, lambda: qa.ask(_ASKS[2]))
+    prepared = qa.lineage
+
+    calls = []
+
+    def spy(fn):
+        def wrapped(*args, **kwargs):
+            calls.append(fn.__name__)
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(stitch, "stitch_links", spy(stitch.stitch_links))
+    monkeypatch.setattr(graphqa, "prepare_edges", spy(graphqa.prepare_edges))
+    monkeypatch.setattr(graphqa, "known_columns", spy(graphqa.known_columns))
+    second = _jobs_in(spark, lambda: qa.ask(_ASKS[2]))
+    third = _jobs_in(spark, lambda: qa.ask(_ASKS[2]))
+
+    assert calls == []
+    assert qa.lineage is prepared
+    assert second == third < first
+
+
+def _persistent_rdds(spark, collect_garbage: bool) -> set[int]:
+    """Ids of the RDDs the JVM holds persisted. With `collect_garbage`, only
+    what is still referenced: py4j's finalizer thread releases the JVM
+    handles of collected Python objects about once a second."""
+    sc = spark.sparkContext
+    ids = None
+    while True:
+        if collect_garbage:
+            gc.collect()
+            time.sleep(1.2)
+            sc._jvm.System.gc()
+            time.sleep(0.2)
+        last, ids = ids, set(sc._jsc.getPersistentRDDs().keySet())
+        if not collect_garbage or ids == last:
+            return ids
+
+
+def test_asks_release_their_checkpoints(spark):
+    qa = QASession.build(spark)
+    qa.ask(_ASKS[0])  # prepares the graph, which the session keeps
+    after_first = _persistent_rdds(spark, collect_garbage=True)
+
+    for q in _ASKS + _ASKS[:2]:
+        qa.ask(q)
+
+    # released when each ask returns, not at the JVM's next garbage collection
+    assert _persistent_rdds(spark, collect_garbage=False) == after_first
+    assert _persistent_rdds(spark, collect_garbage=True) == after_first

@@ -351,13 +351,13 @@ def test_bfs_closure_depth_semantics_after_broadcast_rewrite(spark, sf_dir):
     # dedup) must keep min-depth semantics exactly; the per-hop plans are
     # checkpoint-materialized so the broadcast itself is asserted via the
     # steady-state timing artifact, not explain()
-    from ai_metadata_lineage_pyspark_spark.operators.graph import bfs_closure
+    from ai_metadata_lineage_pyspark_spark.operators.graph import bfs_closure, prepare_edges
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(100)], "src long, dst long"
     )
     seeds = spark.createDataFrame([(0,), (50,)], "seed long")
-    out = bfs_closure(edges, seeds, max_depth=2)
+    out = bfs_closure(prepare_edges(edges), seeds, max_depth=2)
     # depth semantics unchanged: 0->1,2 and 50->51,52
     rows = {(r.seed, r.node, r.depth) for r in out.collect()}
     assert rows == {(0, 1, 1), (0, 2, 2), (50, 51, 1), (50, 52, 2)}

@@ -47,15 +47,19 @@ from ai_metadata_lineage_pyspark_spark.session import get_spark  # noqa: E402
 def main() -> None:
     spark = get_spark("long-graph-probe")
     walls: list[float] = []
-    real_cut = graph_mod.iter_checkpoint
 
-    def timed_cut(df, eager: bool = True):
-        t0 = time.time()
-        out = real_cut(df, eager)
-        walls.append(round(time.time() - t0, 3))
-        return out
+    def timed(cut):
+        def timed_cut(*args, **kwargs):
+            t0 = time.time()
+            out = cut(*args, **kwargs)
+            walls.append(round(time.time() - t0, 3))
+            return out
 
-    graph_mod.iter_checkpoint = timed_cut
+        return timed_cut
+
+    # BFS rounds cut through counted_checkpoint, which also materializes
+    graph_mod.iter_checkpoint = timed(graph_mod.iter_checkpoint)
+    graph_mod.counted_checkpoint = timed(graph_mod.counted_checkpoint)
     if OP == "pagerank":
         graph_mod._PR_ITERS = ITERS
         df = graph_mod.pagerank_trade_network(spark, SF_DIR)
@@ -76,7 +80,7 @@ def main() -> None:
         seeds = events.filter(F.col("event_id") % 97 == 0).select(
             F.col("event_id").alias("seed")
         )
-        df = graph_mod.bfs_closure(edges, seeds, max_depth=ITERS)
+        df = graph_mod.bfs_closure(graph_mod.prepare_edges(edges), seeds, max_depth=ITERS)
 
     rows = sorted(tuple(str(v) for v in r) for r in df.collect())
     digest = hashlib.md5("\n".join("\x1f".join(r) for r in rows).encode()).hexdigest()

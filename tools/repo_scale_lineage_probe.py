@@ -64,6 +64,7 @@ from ai_metadata_lineage_pyspark_spark.lineage.extract import (  # noqa: E402
 )
 from ai_metadata_lineage_pyspark_spark.lineage.graphqa import (  # noqa: E402
     column_closure,
+    column_edges,
     column_graph,
 )
 from ai_metadata_lineage_pyspark_spark.lineage.postprocess import (  # noqa: E402
@@ -201,7 +202,8 @@ def main() -> int:
     t0 = time.time()
     full = sorted(
         tuple(r)
-        for r in column_closure(column_graph(edges), CLOSURE_START).collect()
+        for r in column_closure(column_edges(column_graph(edges)), [CLOSURE_START])
+        .select("impacted_col", "depth").collect()
     )
     full_hash = hashlib.sha256(json.dumps(full).encode()).hexdigest()[:16]
     base_facts = extract_from_dir(spark, FIXTURE_DIR)
@@ -210,7 +212,8 @@ def main() -> int:
     )
     base = sorted(
         tuple(r)
-        for r in column_closure(column_graph(base_edges), CLOSURE_START).collect()
+        for r in column_closure(column_edges(column_graph(base_edges)), [CLOSURE_START])
+        .select("impacted_col", "depth").collect()
     )
     base_hash = hashlib.sha256(json.dumps(base).encode()).hexdigest()[:16]
     _emit(stage="closure", wall_sec=round(time.time() - t0, 1),
