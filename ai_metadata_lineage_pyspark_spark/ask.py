@@ -27,14 +27,13 @@ here are O(caps), not O(corpus) — the heavy lifting (extraction, graph
 closure, embedding, top-k) stays in Spark jobs.
 
 The first ask() of a session also prepares the lineage graph
-(graphqa.prepare_graph): it collects the known-column set and lineage-cuts
-the column graph, its one- and two-hop edge lists and the stitched script
-edge list. On the perfbench lineage repository (24 scripts, 4-core host,
-warm JVM) that is a one-off ~0.4 s and 12 Spark jobs. Every ask then runs
-retrieval (4 jobs) and, when the question names known columns, one
-multi-seed column closure, one reasons query, one script closure and the
-script and gold-output lists over that state: 34-35 jobs in all for one
-column, 39 for two.
+(graphqa.prepare_graph): one column closure seeded with every known column
+and one script closure seeded with every script, whose capped per-column
+evidence lists one action collects to the driver before the closures'
+checkpoints are released. On the perfbench lineage repository (24 scripts,
+4-core host, warm JVM) that is a one-off 66 Spark jobs and 2.5-3.7 s. Every
+ask then runs retrieval (4 jobs) and assembles its evidence from those
+lists on the driver, with no further job.
 """
 
 from __future__ import annotations
@@ -45,6 +44,7 @@ from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .lineage.corpus import build_corpus
 from .lineage.embed import TOP_K, embed_documents, hash_embed, retrieve_top_k
 from .lineage.enrich import MockModelClient, ModelClient, answer_question
 from .lineage.extract import assets_table, columns_table, dataframes_table
@@ -58,11 +58,12 @@ RETRIEVAL_SHOW = 10
 @dataclass
 class QASession:
     """Extracted lineage tables + embedded corpus, built once per process
-    (the reference loads outputs/ + the FAISS store once at startup,
-    qa/ask.py:462-471). The first ask() prepares the lineage graph over them
-    (known columns, lineage-cut column and script edge lists) and keeps it
-    for the session; every ask() then only runs its own closures and
-    lookups (see the module docstring for job counts)."""
+    from one extraction of the scripts (the reference loads outputs/ + the
+    FAISS store once at startup, qa/ask.py:462-471). The first ask()
+    prepares the lineage graph over them, every known column's capped
+    evidence lists held on the driver, and keeps it for the session; every
+    ask() then runs only retrieval's jobs (see the module docstring for job
+    counts and the one-off cost)."""
 
     columns: DataFrame
     edges: DataFrame
@@ -73,20 +74,23 @@ class QASession:
 
     @cached_property
     def lineage(self) -> LineageGraph:
-        """The prepared lineage graph, built on first use."""
+        """The prepared lineage graph, built on first use: it holds no
+        DataFrame or JVM block, only lists bounded by |known columns| x the
+        four show caps."""
         return prepare_graph(self.columns, self.edges, self.assets)
 
     @classmethod
     def build(cls, spark: SparkSession, client: ModelClient | None = None) -> "QASession":
-        from .lineage.queries import _corpus, _facts
+        from .lineage.queries import _facts
 
         facts = _facts(spark)
         cols, dfs = columns_table(facts), dataframes_table(facts)
-        corpus = _corpus(spark).localCheckpoint(eager=False)
+        edges, assets = edges_table(cols, dfs), assets_table(facts)
+        corpus = build_corpus(assets, dfs, cols, edges).localCheckpoint(eager=False)
         return cls(
             columns=cols,
-            edges=edges_table(cols, dfs),
-            assets=assets_table(facts),
+            edges=edges,
+            assets=assets,
             corpus=corpus,
             embedded=embed_documents(corpus).localCheckpoint(eager=False),
             client=client or MockModelClient(),

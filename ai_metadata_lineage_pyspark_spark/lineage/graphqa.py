@@ -6,19 +6,22 @@ Spark-native re-expression of qa/ask.py's deterministic core:
   * build_dependency_graph (qa/ask.py:167-208)  -> column_graph(), cut once
     with its two-hop list by column_edges()
   * downstream_closure     (qa/ask.py:211-223)  -> column_closure(): one
-    multi-seed frontier BFS (operators/graph.py) for all of a question's
-    candidate columns, node cap 2000 per column
+    multi-seed frontier BFS (operators/graph.py), node cap 2000 per seed
   * build_asset_graph      (qa/ask.py:295-322)  -> script_edges()
   * bfs_downstream_scripts (qa/ask.py:325-340)  -> downstream_scripts()
   * gold_outputs_for_scripts (qa/ask.py:343-360) -> gold_outputs()
-  * seed_scripts_for_column (qa/ask.py:363-370) -> seed_scripts()
+  * seed_scripts_for_column (qa/ask.py:363-370) -> seed_scripts(), and
+    column_scripts() for every column at once
   * extract_candidate_columns (qa/ask.py:226-244) -> candidate_columns()
   * build_evidence (qa/ask.py:391-450)          -> build_evidence()
 
 The reference loads its lineage outputs once at startup and answers every
 question from them (qa/ask.py:457-471). Here that load is prepare_graph():
-the known-column set and the lineage-cut column and script edge lists, built
-once and shared by every build_evidence() call over the same repository.
+one column closure seeded with every known column and one script closure
+seeded with every script give each known column its capped evidence lists,
+which one action collects into a driver-side LineageGraph. build_evidence()
+then looks a question's columns up and merges their lists, with no Spark
+job.
 
 The LLM answer step stays behind the pluggable client in enrich.py —
 deterministic artifacts never depend on it (README.md:111-113 rule).
@@ -59,19 +62,23 @@ def column_edges(graph: DataFrame) -> PreparedEdges:
     two_hop: the column closure's contract depth is 20 — the deep-closure
     shape where halved rounds pay for the edge doubling (r15 sf0.1 A/B:
     2.54s -> 2.47s steady, 35 -> 27 jobs; the win grows with real depth).
-    The doubling is built here, once per repository, not once per closure.
     """
     return prepare_edges(graph, two_hop=True)
 
 
-def column_closure(graph: PreparedEdges, start_cols: Sequence[str], max_depth: int = 20) -> DataFrame:
+def column_closure(
+    graph: PreparedEdges, start_cols: Sequence[str] | DataFrame, max_depth: int = 20
+) -> DataFrame:
     """Downstream transitive closure of each start column, in one BFS.
 
-    Returns (seed, impacted_col, depth, rank): per seed, the first
-    BFS_NODE_LIMIT impacted columns by (depth, column), ranked from 1 in
-    that order (mirrors qa/ask.py:211 limit=2000, per column)."""
-    spark = graph.edges.sparkSession
-    seeds = spark.createDataFrame([(c,) for c in start_cols], "seed string")
+    start_cols: column names, or a one-column DataFrame of them. Returns
+    (seed, impacted_col, depth, rank): per seed, the first BFS_NODE_LIMIT
+    impacted columns by (depth, column), ranked from 1 in that order
+    (mirrors qa/ask.py:211 limit=2000, per column)."""
+    if isinstance(start_cols, DataFrame):
+        seeds = start_cols.toDF("seed")
+    else:
+        seeds = graph.edges.sparkSession.createDataFrame([(c,) for c in start_cols], "seed string")
     closure = bfs_closure(graph, seeds, max_depth=max_depth)
     rank = F.row_number().over(Window.partitionBy("seed").orderBy("depth", "node"))
     return (
@@ -81,12 +88,20 @@ def column_closure(graph: PreparedEdges, start_cols: Sequence[str], max_depth: i
     )
 
 
-def known_columns(columns: DataFrame) -> set[str]:
-    """All column names in the universe (qa/ask.py:202-207)."""
-    rows = columns.select(
-        F.explode(F.array_union(F.array("col_name"), "derived_from")).alias("c")
-    ).distinct().collect()
-    return {r.c for r in rows}
+def column_scripts(columns: DataFrame) -> DataFrame:
+    """(col, script_name): every column of the universe with each script
+    that names it, as a column or as one it derives from — the seed-script
+    rule of qa/ask.py:363-370."""
+    return columns.select(
+        F.explode(F.array_union(F.array("col_name"), "derived_from")).alias("col"),
+        "script_name",
+    ).distinct()
+
+
+def known_columns(columns: DataFrame) -> DataFrame:
+    """(col,): all column names in the universe, once each
+    (qa/ask.py:202-207)."""
+    return column_scripts(columns).select("col").distinct()
 
 
 def candidate_columns(question: str, known: Set[str], cap: int = MAX_IMPACT_COLS) -> list[str]:
@@ -101,26 +116,32 @@ def candidate_columns(question: str, known: Set[str], cap: int = MAX_IMPACT_COLS
     return out[:cap]
 
 
-def script_edges(assets: DataFrame) -> PreparedEdges:
+def script_edges(assets: DataFrame, two_hop: bool = False) -> PreparedEdges:
     """Writer-script -> reader-script edges over shared asset paths,
     lineage-cut.
 
-    Deliberately 1-hop: the script wave terminates in a couple of hops on
-    any realistic repo DAG, and the r15 A/B measured the edge-doubling pass
-    as pure overhead here (1.54s -> 2.31s steady)."""
+    1-hop by default: one column's script wave terminates in a couple of
+    hops on any realistic repo DAG, and the r15 A/B measured the
+    edge-doubling pass as pure overhead there (1.54s -> 2.31s steady).
+    prepare_graph's closure seeded with every script runs as deep as the
+    longest script chain, where two_hop paid for itself (perfbench lineage
+    repository: 66 instead of 67 preparation jobs, faster in 8 of 11
+    alternating rounds)."""
     from .stitch import stitch_links
 
     return prepare_edges(
         stitch_links(assets).select(
             F.col("from_script").alias("src"), F.col("to_script").alias("dst")
-        )
+        ),
+        two_hop=two_hop,
     )
 
 
 def downstream_scripts(graph: PreparedEdges, seed_scripts_df: DataFrame, max_depth: int = 10) -> DataFrame:
-    """Transitive downstream scripts from a seed set (seeds excluded)."""
+    """(seed, script_name): the transitive downstream scripts of each seed
+    script (seeds excluded)."""
     closure = bfs_closure(graph, seed_scripts_df, max_depth=max_depth)
-    return closure.select(F.col("node").alias("script_name")).distinct()
+    return closure.select("seed", F.col("node").alias("script_name"))
 
 
 def seed_scripts(columns: DataFrame, col_names: Sequence[str]) -> DataFrame:
@@ -148,83 +169,121 @@ def gold_outputs(assets: DataFrame, scripts: DataFrame) -> DataFrame:
 
 @dataclass(frozen=True)
 class LineageGraph:
-    """The ask-invariant state of one lineage repository."""
+    """Every known column's capped evidence lists, held on the driver.
 
-    columns: DataFrame
-    assets: DataFrame
+    impact: column -> its first MAX_IMPACT_SHOW downstream columns by
+      (depth, column).
+    reasons: column -> its first MAX_REASON_SHOW one-hop edges by
+      (dst, reason), as "src -> dst: reason".
+    scripts: column -> its first MAX_SCRIPTS_SHOW impacted scripts (seed
+      scripts plus their downstream scripts) by name.
+    gold: column -> the first MAX_GOLD_SHOW (path, script_name) gold writes
+      of its impacted scripts, in that order.
+
+    A column with no downstream column or no one-hop edge has no entry in
+    `impact` or `reasons`. Every known column names a script, so `scripts`
+    has exactly one entry per known column. The state is bounded by the
+    caps, not by the repository's edge or link counts: at most
+    |known| x (MAX_IMPACT_SHOW + MAX_REASON_SHOW + MAX_SCRIPTS_SHOW +
+    MAX_GOLD_SHOW) strings or pairs. It references no DataFrame and no JVM
+    block.
+    """
+
     known: frozenset[str]
-    column_graph: DataFrame  # (src, dst, reason): the one-hop reasons
-    column_edges: PreparedEdges
-    script_edges: PreparedEdges
+    impact: dict[str, tuple[str, ...]]
+    reasons: dict[str, tuple[str, ...]]
+    scripts: dict[str, tuple[str, ...]]
+    gold: dict[str, tuple[tuple[str, str], ...]]
 
 
 def prepare_graph(columns: DataFrame, edges: DataFrame, assets: DataFrame) -> LineageGraph:
-    """Collect the known columns and lineage-cut the column graph, its edge
-    lists (one- and two-hop) and the script edge list: the work every
-    question over the repository would otherwise repeat."""
+    """Collect every known column's capped evidence lists in one action,
+    then release the closures' checkpoints: the session keeps only the
+    driver-side lists."""
+    lists: dict[str, dict[str, list]] = {kind: {} for kind in ("impact", "reasons", "scripts", "gold")}
+    with checkpoint_scope():
+        rows = _evidence_lists(columns, edges, assets).collect()
+    for r in sorted(rows, key=lambda r: r.rank):
+        if r.kind == "reasons":
+            value = f"{r.key} -> {r.a}: {r.b}"
+        elif r.kind == "gold":
+            value = (r.a, r.b)
+        else:
+            value = r.a
+        lists[r.kind].setdefault(r.key, []).append(value)
+    frozen = {kind: {k: tuple(v) for k, v in by_col.items()} for kind, by_col in lists.items()}
+    return LineageGraph(known=frozenset(frozen["scripts"]), **frozen)
+
+
+def _evidence_lists(columns: DataFrame, edges: DataFrame, assets: DataFrame) -> DataFrame:
+    """(kind, key, rank, a, b): the four capped lists of every known column
+    `key`, ranked from 1 in show order, as one tagged union."""
+
+    def first(df: DataFrame, key: str, order: Sequence[str], cap: int) -> DataFrame:
+        rank = F.row_number().over(Window.partitionBy(key).orderBy(*order))
+        return df.withColumn("rank", rank).filter(F.col("rank") <= cap)
+
+    def tagged(kind: str, df: DataFrame, key: str, a: str, b: str | None = None) -> DataFrame:
+        return df.select(
+            F.lit(kind).alias("kind"),
+            F.col(key).alias("key"),
+            "rank",
+            F.col(a).alias("a"),
+            (F.col(b) if b else F.lit(None).cast("string")).alias("b"),
+        )
+
     graph = iter_checkpoint(column_graph(edges))
-    return LineageGraph(
-        columns=columns,
-        assets=assets,
-        known=frozenset(known_columns(columns)),
-        column_graph=graph,
-        column_edges=column_edges(graph),
-        script_edges=script_edges(assets),
+    col_scripts = column_scripts(columns)
+    known = known_columns(columns)
+    impact = column_closure(column_edges(graph), known).filter(F.col("rank") <= MAX_IMPACT_SHOW)
+    reasons = first(
+        graph.join(known.withColumnRenamed("col", "src"), "src", "left_semi"),
+        "src",
+        ["dst", "reason"],
+        MAX_REASON_SHOW,
+    )
+    # each column's impacted scripts: its seed scripts plus their downstream
+    # scripts, from one closure seeded with every script
+    down = downstream_scripts(
+        script_edges(assets, two_hop=True),
+        col_scripts.select(F.col("script_name").alias("seed")).distinct(),
+    ).select(F.col("seed").alias("script_name"), F.col("script_name").alias("down"))
+    impacted = col_scripts.unionByName(
+        col_scripts.join(down, "script_name").select("col", F.col("down").alias("script_name"))
+    ).distinct()
+    scripts = first(impacted, "col", ["script_name"], MAX_SCRIPTS_SHOW)
+    gold = first(
+        impacted.join(gold_outputs(assets, impacted), "script_name"),
+        "col",
+        ["path", "script_name"],
+        MAX_GOLD_SHOW,
+    )
+    return (
+        tagged("impact", impact, "seed", "impacted_col")
+        .unionByName(tagged("reasons", reasons, "src", "dst", "reason"))
+        .unionByName(tagged("scripts", scripts, "col", "script_name"))
+        .unionByName(tagged("gold", gold, "col", "path", "script_name"))
     )
 
 
 def build_evidence(question: str, lineage: LineageGraph) -> str:
-    """Assemble the capped, ordered evidence text (qa/ask.py:391-450).
+    """Assemble the capped, ordered evidence text (qa/ask.py:391-450) from
+    the prepared lists, with no Spark job.
 
-    All of the question's candidate columns share one column closure, one
-    one-hop reasons query and one script closure over the union of their
-    seed scripts; the text is the same as column-by-column evidence."""
+    A multi-column question lists each column's impact and reasons, then
+    the merged scripts and gold outputs of all its columns. The merge is
+    exact: the first N of a union, in one total order, are the first N of
+    the union of each set's first N."""
     cands = candidate_columns(question, lineage.known)
-    sections: list[str] = [f"QUESTION: {question}", f"CANDIDATE COLUMNS: {', '.join(cands) or '(none)'}"]
-    if cands:
-        # the closures' frontier checkpoints are all collected into text
-        # here, so they are released on the way out, not at the next JVM GC
-        with checkpoint_scope():
-            sections += _candidate_sections(lineage, cands)
-    return re.sub(r"[ \t]+", " ", "\n".join(sections))
-
-
-def _candidate_sections(lineage: LineageGraph, cands: list[str]) -> list[str]:
-    """The impact, reasons, impacted-script and gold-output lines."""
-    # the impact and reason lists are capped per column, so they are ordered
-    # on the driver: a global sort would cost a range-sampling job and a
-    # shuffle
-    impacted: dict[str, list[str]] = {c: [] for c in cands}
-    closure = column_closure(lineage.column_edges, cands)
-    for r in sorted(closure.filter(F.col("rank") <= MAX_IMPACT_SHOW).collect(), key=lambda r: r.rank):
-        impacted[r.seed].append(r.impacted_col)
-    reasons: dict[str, list[str]] = {c: [] for c in cands}
-    rank = F.row_number().over(Window.partitionBy("src").orderBy("dst", "reason"))
-    reason_rows = (
-        lineage.column_graph.filter(F.col("src").isin(cands))
-        .withColumn("rank", rank)
-        .filter(F.col("rank") <= MAX_REASON_SHOW)
-        .collect()
-    )
-    for r in sorted(reason_rows, key=lambda r: r.rank):
-        reasons[r.src].append(f"{r.src} -> {r.dst}: {r.reason}")
-    lines = []
+    lines = [f"QUESTION: {question}", f"CANDIDATE COLUMNS: {', '.join(cands) or '(none)'}"]
     for cand in cands:
-        cols = impacted[cand]
+        cols = lineage.impact.get(cand, ())
         lines.append(f"COLUMN IMPACT {cand} -> ({len(cols)}): {', '.join(cols) or '(none)'}")
-        if reasons[cand]:
-            lines.append(f"ONE-HOP REASONS {cand}: " + " | ".join(reasons[cand]))
-    seeds = seed_scripts(lineage.columns, cands)
-    down = downstream_scripts(lineage.script_edges, seeds)
-    impacted_scripts = seeds.select(F.col("seed").alias("script_name")).union(down).distinct()
-    # order, then cap: a cap before the sort would list an arbitrary subset
-    # once the set outgrows it
-    names = [
-        r.script_name
-        for r in impacted_scripts.orderBy("script_name").limit(MAX_SCRIPTS_SHOW).collect()
-    ]
-    lines.append(f"IMPACTED SCRIPTS ({len(names)}): {', '.join(names)}")
-    gold = gold_outputs(lineage.assets, impacted_scripts)
-    paths = [r.path for r in gold.orderBy("path").limit(MAX_GOLD_SHOW).collect()]
-    lines.append(f"GOLD OUTPUTS ({len(paths)}): {', '.join(paths)}")
-    return lines
+        if cand in lineage.reasons:
+            lines.append(f"ONE-HOP REASONS {cand}: " + " | ".join(lineage.reasons[cand]))
+    if cands:
+        names = sorted({s for c in cands for s in lineage.scripts[c]})[:MAX_SCRIPTS_SHOW]
+        lines.append(f"IMPACTED SCRIPTS ({len(names)}): {', '.join(names)}")
+        gold = sorted({g for c in cands for g in lineage.gold.get(c, ())})[:MAX_GOLD_SHOW]
+        lines.append(f"GOLD OUTPUTS ({len(gold)}): {', '.join(path for path, _ in gold)}")
+    return re.sub(r"[ \t]+", " ", "\n".join(lines))

@@ -375,7 +375,7 @@ def _impacted_scripts(spark: SparkSession):
     facts = _facts(spark)
     assets = assets_table(facts)
     seeds = seed_scripts(columns_table(facts), [_IMPACT_COLUMN])
-    down = downstream_scripts(script_edges(assets), seeds)
+    down = downstream_scripts(script_edges(assets), seeds).select("script_name").distinct()
     scripts = seeds.select(F.col("seed").alias("script_name")).union(down).distinct()
     return assets, scripts
 
@@ -413,7 +413,7 @@ def lineage_downstream_scripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     facts = _facts(spark)
     seeds = seed_scripts(columns_table(facts), [_IMPACT_COLUMN])
-    return downstream_scripts(script_edges(assets_table(facts)), seeds)
+    return downstream_scripts(script_edges(assets_table(facts)), seeds).select("script_name").distinct()
 
 
 @register(

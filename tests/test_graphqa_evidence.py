@@ -1,10 +1,11 @@
 """build_evidence over a prepared lineage graph.
 
 It caps its script and gold-output lists AFTER ordering them: above the cap
-it lists the first names in order, not an arbitrary subset. A question's
-candidate columns share one multi-seed closure whose per-column lists are
-those of the single-column questions, and a QASession prepares the graph
-once and releases each ask's checkpoints when the ask returns.
+it lists the first names in order, not an arbitrary subset. The prepared
+graph holds every known column's capped lists, no longer than their caps;
+a multi-column question's merged lists equal a column-by-column build. A
+QASession prepares the graph once, on its first ask, and holds no
+checkpoint afterwards; later asks run only retrieval's Spark jobs.
 """
 
 from __future__ import annotations
@@ -18,10 +19,11 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from ai_metadata_lineage_pyspark_spark.ask import QASession
-from ai_metadata_lineage_pyspark_spark.lineage import graphqa, stitch
+from ai_metadata_lineage_pyspark_spark.lineage import graphqa, queries, stitch
 from ai_metadata_lineage_pyspark_spark.lineage.graphqa import (
     MAX_GOLD_SHOW,
     MAX_IMPACT_SHOW,
+    MAX_REASON_SHOW,
     MAX_SCRIPTS_SHOW,
     build_evidence,
     column_closure,
@@ -139,7 +141,8 @@ def _bfs(adj: dict, start: str, max_depth: int) -> list[tuple[int, str]]:
 
 def _scripts_column_by_column(col_rows, asset_rows, cands):
     """IMPACTED SCRIPTS and GOLD OUTPUTS as a per-column evidence build lists
-    them: each column's seed scripts plus their downstream scripts, united."""
+    them: each column's seed scripts plus their downstream scripts, united,
+    under graphqa's caps at call time."""
     writer = {}
     for script, direction, path in asset_rows:
         if direction == "write":
@@ -158,7 +161,7 @@ def _scripts_column_by_column(col_rows, asset_rows, cands):
         path for script, direction, path in asset_rows
         if direction == "write" and script in scripts and "gold" in path.split("/")
     )
-    return sorted(scripts)[:MAX_SCRIPTS_SHOW], gold[:MAX_GOLD_SHOW]
+    return sorted(scripts)[: graphqa.MAX_SCRIPTS_SHOW], gold[: graphqa.MAX_GOLD_SHOW]
 
 
 def test_two_column_question_joins_the_single_column_answers(spark):
@@ -301,3 +304,122 @@ def test_asks_release_their_checkpoints(spark):
     # released when each ask returns, not at the JVM's next garbage collection
     assert _persistent_rdds(spark, collect_garbage=False) == after_first
     assert _persistent_rdds(spark, collect_garbage=True) == after_first
+
+
+def test_asks_after_preparation_run_only_retrieval_jobs(spark):
+    qa = QASession.build(spark)
+    qa.ask(_ASKS[2])  # prepares the graph
+
+    for q in _ASKS:
+        assert _jobs_in(spark, lambda: build_evidence(q, qa.lineage)) == 0
+        assert _jobs_in(spark, lambda: qa.ask(q)) == _jobs_in(spark, lambda: qa.retrieve(q))
+
+
+def test_build_extracts_the_scripts_once(spark, monkeypatch):
+    extract, calls = queries.extract_from_dir, []
+    monkeypatch.setattr(queries, "extract_from_dir", lambda *a, **k: calls.append(a) or extract(*a, **k))
+    QASession.build(spark).ask(_ASKS[0])
+
+    assert len(calls) == 1
+
+
+def test_prepare_graph_leaves_no_persisted_rdd(spark):
+    _, columns, edges, _, assets = _wide_repo(spark)
+    before = _persistent_rdds(spark, collect_garbage=True)
+
+    lineage = prepare_graph(columns, edges, assets)
+
+    assert lineage.impact["amount"]
+    assert _persistent_rdds(spark, collect_garbage=False) == before
+    assert _persistent_rdds(spark, collect_garbage=True) == before
+
+
+def _assert_capped(lineage):
+    """Every known column has a script list, and no list outgrows its cap."""
+    assert set(lineage.scripts) == lineage.known
+    for lists, cap in (
+        (lineage.impact, MAX_IMPACT_SHOW),
+        (lineage.reasons, MAX_REASON_SHOW),
+        (lineage.scripts, MAX_SCRIPTS_SHOW),
+        (lineage.gold, MAX_GOLD_SHOW),
+    ):
+        assert set(lists) <= lineage.known
+        assert all(0 < len(v) <= cap for v in lists.values())
+
+
+def test_per_column_lists_stop_at_their_caps(spark):
+    # the driver-side state is bounded by |known| x the four caps
+    _, _, columns, edges, assets = _repo(spark)
+    lineage = prepare_graph(columns, edges, assets)
+    _assert_capped(lineage)
+    assert lineage.known == {"amount", "amount_usd"}
+    assert len(lineage.scripts["amount"]) == MAX_SCRIPTS_SHOW  # 75 impacted
+    assert len(lineage.gold["amount"]) == MAX_GOLD_SHOW  # 70 gold writes
+
+    _, columns, edges, _, assets = _wide_repo(spark)
+    lineage = prepare_graph(columns, edges, assets)
+    _assert_capped(lineage)
+    assert len(lineage.impact["amount"]) == MAX_IMPACT_SHOW  # _N_WIDE + 1 downstream
+    assert len(lineage.reasons["amount"]) == MAX_REASON_SHOW  # _N_WIDE one-hop edges
+
+
+# --- the merge of per-column lists ------------------------------------------
+
+_COLS = [f"c{i}" for i in range(6)]
+_SCRIPTS = [f"s{i}" for i in range(5)]
+_PATHS = [f"s3a://lake/{layer}/t{i}/" for layer in ("gold", "silver") for i in range(3)]
+_CAP = 2  # stands in for all four show caps, so small repositories pass them
+
+
+def _reference_evidence(question, cands, col_rows, col_edges, asset_rows):
+    """The evidence text built column by column in Python."""
+    adj, reasons = {}, {}
+    for src, dst, reason in col_edges:
+        if src != dst:
+            adj.setdefault(src, set()).add(dst)
+            reasons.setdefault(src, set()).add((dst, reason))
+    lines = [f"QUESTION: {question}", f"CANDIDATE COLUMNS: {', '.join(cands)}"]
+    for c in cands:
+        shown = [n for _, n in _bfs(adj, c, 20)][:_CAP]
+        lines.append(f"COLUMN IMPACT {c} -> ({len(shown)}): {', '.join(shown) or '(none)'}")
+        if c in reasons:
+            first = sorted(reasons[c])[:_CAP]
+            lines.append(f"ONE-HOP REASONS {c}: " + " | ".join(f"{c} -> {d}: {r}" for d, r in first))
+    names, gold = _scripts_column_by_column(col_rows, asset_rows, cands)
+    lines.append(f"IMPACTED SCRIPTS ({len(names)}): {', '.join(names)}")
+    lines.append(f"GOLD OUTPUTS ({len(gold)}): {', '.join(gold)}")
+    return "\n".join(lines)
+
+
+@given(
+    owners=st.lists(st.sampled_from(_SCRIPTS), min_size=len(_COLS), max_size=len(_COLS)),
+    derived=st.lists(st.lists(st.sampled_from(_COLS), max_size=2, unique=True), min_size=len(_COLS), max_size=len(_COLS)),
+    col_edges=st.lists(
+        st.tuples(st.sampled_from(_COLS), st.sampled_from(_COLS), st.sampled_from(["r0", "r1"])), max_size=14
+    ),
+    asset_rows=st.lists(
+        st.tuples(st.sampled_from(_SCRIPTS), st.sampled_from(["read", "write"]), st.sampled_from(_PATHS)),
+        min_size=1,
+        max_size=14,
+        unique=True,
+    ),
+    asks=st.lists(st.lists(st.sampled_from(_COLS), min_size=1, max_size=3, unique=True), min_size=1, max_size=3),
+)
+@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_merged_lists_equal_column_by_column_evidence(spark, monkeypatch, owners, derived, col_edges, asset_rows, asks):
+    for cap in ("MAX_IMPACT_SHOW", "MAX_REASON_SHOW", "MAX_SCRIPTS_SHOW", "MAX_GOLD_SHOW"):
+        monkeypatch.setattr(graphqa, cap, _CAP)
+    col_rows = [(s, c, d) for s, c, d in zip(owners, _COLS, derived)]
+    columns = spark.createDataFrame(col_rows, "script_name string, col_name string, derived_from array<string>")
+    edges = spark.createDataFrame(
+        [("s", dst, src, reason) for src, dst, reason in col_edges],
+        "script_name string, target_col string, src_col string, reason string",
+    )
+    assets = spark.createDataFrame(asset_rows, "script_name string, direction string, path string")
+    lineage = prepare_graph(columns, edges, assets)
+
+    assert lineage.known == set(_COLS)
+    for cands in asks:
+        question = "what if " + " and ".join(f"`{c}`" for c in cands) + " change"
+        expected = _reference_evidence(question, cands, col_rows, col_edges, asset_rows)
+        assert build_evidence(question, lineage) == expected

@@ -30,6 +30,9 @@ the run self-checking rather than merely big:
   column name (the reference's qa/ask.py design), so 834 path-disjoint
   replicas must not perturb it.
 
+A last stage times an interactive Q&A session over the full corpus: the
+one-off lineage-graph preparation of its first ask, then two asks.
+
 Usage: python tools/repo_scale_lineage_probe.py [n_scripts] [workdir]
 Emits one JSON line per stage + a final summary; exit 1 on any invariant
 failure.
@@ -81,6 +84,10 @@ from ai_metadata_lineage_pyspark_spark.session import get_spark  # noqa: E402
 N_SCRIPTS = int(sys.argv[1]) if len(sys.argv) > 1 else 5000
 WORKDIR = sys.argv[2] if len(sys.argv) > 2 else "/tmp/lineage_repo_5k"
 CLOSURE_START = "temp_c"  # deepest fixture column: 8 downstream nodes
+ASK_QUESTIONS = (
+    "what breaks downstream if `temp_c` changes",
+    "how do alert_score and n_readings flow into the gold outputs",
+)
 
 
 def _emit(**kv) -> None:
@@ -223,6 +230,24 @@ def main() -> int:
             f"closure hash {full_hash} != single-template {base_hash} — "
             "path-disjoint replicas perturbed global column closure"
         )
+
+    # -- Q&A session: the one-off graph preparation, then two asks ---------
+    from ai_metadata_lineage_pyspark_spark.ask import QASession
+    from ai_metadata_lineage_pyspark_spark.lineage.embed import embed_documents
+
+    qa = QASession(columns=columns, edges=edges, assets=assets, corpus=corpus,
+                   embedded=embed_documents(corpus).localCheckpoint(eager=True))
+    t0 = time.time()
+    lineage = qa.lineage
+    prepare_s = time.time() - t0
+    ask_s = []
+    for q in ASK_QUESTIONS:
+        t1 = time.time()
+        qa.ask(q)
+        ask_s.append(round(time.time() - t1, 2))
+    _emit(stage="ask", prepare_s=round(prepare_s, 2), ask_s=ask_s,
+          prepare_plus_two_asks_s=round(time.time() - t0, 2),
+          known_columns=len(lineage.known))
 
     _emit(stage="summary", scripts=n_scripts, failures=failures,
           ok=not failures)
