@@ -21,19 +21,18 @@ retrieved-doc count — qa/ask.py:505-512).
 Usage:
     python -m ai_metadata_lineage_pyspark_spark.ask
 
-Driver-side by design: every per-question computation is bounded by the
-same caps as the batch queries (MAX_IMPACT_SHOW etc.), so the collect()s
-here are O(caps), not O(corpus) — the heavy lifting (extraction, graph
-closure, embedding, top-k) stays in Spark jobs.
+Driver-side by design: the heavy lifting (extraction, graph closure,
+embedding, top-k) stays in Spark jobs, and what the session keeps on the
+driver is the known-column set plus the capped evidence lists of at most
+graphqa.MAX_CACHED_COLUMNS columns (see graphqa.LineageGraph).
 
-The first ask() of a session also prepares the lineage graph
-(graphqa.prepare_graph): one column closure seeded with every known column
-and one script closure seeded with every script, whose capped per-column
-evidence lists one action collects to the driver before the closures'
-checkpoints are released. On the perfbench lineage repository (24 scripts,
-4-core host, warm JVM) that is a one-off 66 Spark jobs and 2.5-3.7 s. Every
-ask then runs retrieval (4 jobs) and assembles its evidence from those
-lists on the driver, with no further job.
+The first ask() of a session collects the known columns
+(graphqa.prepare_graph). A column's evidence lists are computed on the
+first question that names it: one column closure seeded with that
+question's new columns and one script closure seeded with their scripts,
+collected in one action, the closures' checkpoints released on return. A
+question whose columns were all asked about before runs only retrieval's
+4 Spark jobs.
 """
 
 from __future__ import annotations
@@ -60,10 +59,9 @@ class QASession:
     """Extracted lineage tables + embedded corpus, built once per process
     from one extraction of the scripts (the reference loads outputs/ + the
     FAISS store once at startup, qa/ask.py:462-471). The first ask()
-    prepares the lineage graph over them, every known column's capped
-    evidence lists held on the driver, and keeps it for the session; every
-    ask() then runs only retrieval's jobs (see the module docstring for job
-    counts and the one-off cost)."""
+    prepares the lineage graph over them, which keeps each asked column's
+    capped evidence lists for the session; an ask() about columns already
+    asked runs only retrieval's jobs (see the module docstring)."""
 
     columns: DataFrame
     edges: DataFrame
@@ -74,9 +72,9 @@ class QASession:
 
     @cached_property
     def lineage(self) -> LineageGraph:
-        """The prepared lineage graph, built on first use: it holds no
-        DataFrame or JVM block, only lists bounded by |known columns| x the
-        four show caps."""
+        """The prepared lineage graph, built on first use. It holds no JVM
+        block, only the known columns and at most MAX_CACHED_COLUMNS
+        columns' capped lists."""
         return prepare_graph(self.columns, self.edges, self.assets)
 
     @classmethod

@@ -10,18 +10,18 @@ Spark-native re-expression of qa/ask.py's deterministic core:
   * build_asset_graph      (qa/ask.py:295-322)  -> script_edges()
   * bfs_downstream_scripts (qa/ask.py:325-340)  -> downstream_scripts()
   * gold_outputs_for_scripts (qa/ask.py:343-360) -> gold_outputs()
-  * seed_scripts_for_column (qa/ask.py:363-370) -> seed_scripts(), and
-    column_scripts() for every column at once
+  * seed_scripts_for_column (qa/ask.py:363-370) -> column_scripts(), and
+    seed_scripts() for a set of columns
   * extract_candidate_columns (qa/ask.py:226-244) -> candidate_columns()
   * build_evidence (qa/ask.py:391-450)          -> build_evidence()
 
 The reference loads its lineage outputs once at startup and answers every
-question from them (qa/ask.py:457-471). Here that load is prepare_graph():
-one column closure seeded with every known column and one script closure
-seeded with every script give each known column its capped evidence lists,
-which one action collects into a driver-side LineageGraph. build_evidence()
-then looks a question's columns up and merges their lists, with no Spark
-job.
+question from them (qa/ask.py:457-471). Here prepare_graph() collects the
+known-column set, and a LineageGraph keeps each column's capped evidence
+lists on the driver from the first question that names the column: one
+column closure seeded with that question's new columns and one script
+closure seeded with their scripts compute them. A question whose columns
+were all asked about before runs no Spark job in build_evidence().
 
 The LLM answer step stays behind the pluggable client in enrich.py —
 deterministic artifacts never depend on it (README.md:111-113 rule).
@@ -31,9 +31,9 @@ from __future__ import annotations
 
 import re
 from collections.abc import Sequence, Set
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.graph import PreparedEdges, bfs_closure, prepare_edges
@@ -45,6 +45,7 @@ MAX_IMPACT_SHOW = 80
 MAX_REASON_SHOW = 20
 MAX_SCRIPTS_SHOW = 50
 MAX_GOLD_SHOW = 60
+MAX_CACHED_COLUMNS = 256
 
 
 def column_graph(edges: DataFrame) -> DataFrame:
@@ -66,19 +67,14 @@ def column_edges(graph: DataFrame) -> PreparedEdges:
     return prepare_edges(graph, two_hop=True)
 
 
-def column_closure(
-    graph: PreparedEdges, start_cols: Sequence[str] | DataFrame, max_depth: int = 20
-) -> DataFrame:
+def column_closure(graph: PreparedEdges, start_cols: Sequence[str], max_depth: int = 20) -> DataFrame:
     """Downstream transitive closure of each start column, in one BFS.
 
-    start_cols: column names, or a one-column DataFrame of them. Returns
-    (seed, impacted_col, depth, rank): per seed, the first BFS_NODE_LIMIT
-    impacted columns by (depth, column), ranked from 1 in that order
-    (mirrors qa/ask.py:211 limit=2000, per column)."""
-    if isinstance(start_cols, DataFrame):
-        seeds = start_cols.toDF("seed")
-    else:
-        seeds = graph.edges.sparkSession.createDataFrame([(c,) for c in start_cols], "seed string")
+    Returns (seed, impacted_col, depth, rank): per seed, the first
+    BFS_NODE_LIMIT impacted columns by (depth, column), ranked from 1 in
+    that order (mirrors qa/ask.py:211 limit=2000, per column)."""
+    spark = graph.edges.sparkSession
+    seeds = spark.createDataFrame([(c,) for c in start_cols], "seed string")
     closure = bfs_closure(graph, seeds, max_depth=max_depth)
     rank = F.row_number().over(Window.partitionBy("seed").orderBy("depth", "node"))
     return (
@@ -88,20 +84,21 @@ def column_closure(
     )
 
 
+def _named_columns() -> Column:
+    """The columns a columns-table row names: its own and those it derives
+    from."""
+    return F.explode(F.array_union(F.array("col_name"), "derived_from"))
+
+
+def known_columns(columns: DataFrame) -> set[str]:
+    """All column names in the universe (qa/ask.py:202-207)."""
+    return {r.col for r in columns.select(_named_columns().alias("col")).distinct().collect()}
+
+
 def column_scripts(columns: DataFrame) -> DataFrame:
-    """(col, script_name): every column of the universe with each script
-    that names it, as a column or as one it derives from — the seed-script
-    rule of qa/ask.py:363-370."""
-    return columns.select(
-        F.explode(F.array_union(F.array("col_name"), "derived_from")).alias("col"),
-        "script_name",
-    ).distinct()
-
-
-def known_columns(columns: DataFrame) -> DataFrame:
-    """(col,): all column names in the universe, once each
-    (qa/ask.py:202-207)."""
-    return column_scripts(columns).select("col").distinct()
+    """(col, script_name): each column with every script that names it —
+    the seed-script rule of qa/ask.py:363-370."""
+    return columns.select(_named_columns().alias("col"), "script_name").distinct()
 
 
 def candidate_columns(question: str, known: Set[str], cap: int = MAX_IMPACT_COLS) -> list[str]:
@@ -116,24 +113,19 @@ def candidate_columns(question: str, known: Set[str], cap: int = MAX_IMPACT_COLS
     return out[:cap]
 
 
-def script_edges(assets: DataFrame, two_hop: bool = False) -> PreparedEdges:
+def script_edges(assets: DataFrame) -> PreparedEdges:
     """Writer-script -> reader-script edges over shared asset paths,
     lineage-cut.
 
-    1-hop by default: one column's script wave terminates in a couple of
-    hops on any realistic repo DAG, and the r15 A/B measured the
-    edge-doubling pass as pure overhead there (1.54s -> 2.31s steady).
-    prepare_graph's closure seeded with every script runs as deep as the
-    longest script chain, where two_hop paid for itself (perfbench lineage
-    repository: 66 instead of 67 preparation jobs, faster in 8 of 11
-    alternating rounds)."""
+    Deliberately 1-hop: the script wave terminates in a couple of hops on
+    any realistic repo DAG, and the r15 A/B measured the edge-doubling pass
+    as pure overhead here (1.54s -> 2.31s steady)."""
     from .stitch import stitch_links
 
     return prepare_edges(
         stitch_links(assets).select(
             F.col("from_script").alias("src"), F.col("to_script").alias("dst")
-        ),
-        two_hop=two_hop,
+        )
     )
 
 
@@ -146,11 +138,9 @@ def downstream_scripts(graph: PreparedEdges, seed_scripts_df: DataFrame, max_dep
 
 def seed_scripts(columns: DataFrame, col_names: Sequence[str]) -> DataFrame:
     """Scripts whose column universe contains any of the candidate columns."""
-    names = F.array(*[F.lit(c) for c in col_names])
     return (
-        columns.filter(
-            F.col("col_name").isin(list(col_names)) | F.arrays_overlap("derived_from", names)
-        )
+        column_scripts(columns)
+        .filter(F.col("col").isin(list(col_names)))
         .select(F.col("script_name").alias("seed"))
         .distinct()
     )
@@ -168,41 +158,72 @@ def gold_outputs(assets: DataFrame, scripts: DataFrame) -> DataFrame:
 
 
 @dataclass(frozen=True)
-class LineageGraph:
-    """Every known column's capped evidence lists, held on the driver.
+class ColumnEvidence:
+    """One column's capped evidence lists, each in show order.
 
-    impact: column -> its first MAX_IMPACT_SHOW downstream columns by
-      (depth, column).
-    reasons: column -> its first MAX_REASON_SHOW one-hop edges by
-      (dst, reason), as "src -> dst: reason".
-    scripts: column -> its first MAX_SCRIPTS_SHOW impacted scripts (seed
-      scripts plus their downstream scripts) by name.
-    gold: column -> the first MAX_GOLD_SHOW (path, script_name) gold writes
-      of its impacted scripts, in that order.
-
-    A column with no downstream column or no one-hop edge has no entry in
-    `impact` or `reasons`. Every known column names a script, so `scripts`
-    has exactly one entry per known column. The state is bounded by the
-    caps, not by the repository's edge or link counts: at most
-    |known| x (MAX_IMPACT_SHOW + MAX_REASON_SHOW + MAX_SCRIPTS_SHOW +
-    MAX_GOLD_SHOW) strings or pairs. It references no DataFrame and no JVM
-    block.
+    impact: its first MAX_IMPACT_SHOW downstream columns by (depth, column).
+    reasons: its first MAX_REASON_SHOW one-hop edges by (dst, reason), as
+      "src -> dst: reason".
+    scripts: its first MAX_SCRIPTS_SHOW impacted scripts (seed scripts plus
+      their downstream scripts) by name.
+    gold: the first MAX_GOLD_SHOW (path, script_name) gold writes of its
+      impacted scripts, in that order.
     """
 
+    impact: tuple[str, ...]
+    reasons: tuple[str, ...]
+    scripts: tuple[str, ...]
+    gold: tuple[tuple[str, str], ...]
+
+
+@dataclass
+class LineageGraph:
+    """One repository's known columns, and the evidence lists of the
+    columns asked about so far.
+
+    A column's lists are computed on the first question that names it and
+    kept for at most MAX_CACHED_COLUMNS columns, the least recently asked
+    dropped first. The driver holds the |known| column names (the
+    reference keeps the same set, qa/ask.py:202-207) and at most
+    MAX_CACHED_COLUMNS x (MAX_IMPACT_SHOW + MAX_REASON_SHOW +
+    MAX_SCRIPTS_SHOW + MAX_GOLD_SHOW) strings or pairs, whatever the
+    repository's edge or link counts. It holds no JVM block: `columns`,
+    `edges` and `assets` are the session's own tables.
+    """
+
+    columns: DataFrame
+    edges: DataFrame
+    assets: DataFrame
     known: frozenset[str]
-    impact: dict[str, tuple[str, ...]]
-    reasons: dict[str, tuple[str, ...]]
-    scripts: dict[str, tuple[str, ...]]
-    gold: dict[str, tuple[tuple[str, str], ...]]
+    cached: dict[str, ColumnEvidence] = field(default_factory=dict)
+
+    def evidence(self, cols: Sequence[str]) -> list[ColumnEvidence]:
+        """The lists of each of `cols`; those not yet kept are computed in
+        one batch."""
+        missing = [c for c in cols if c not in self.cached]
+        if missing:
+            self.cached.update(_column_evidence(self.columns, self.edges, self.assets, missing))
+        out = [self.cached.pop(c) for c in cols]
+        self.cached.update(zip(cols, out))  # most recently asked last
+        while len(self.cached) > MAX_CACHED_COLUMNS:
+            del self.cached[next(iter(self.cached))]
+        return out
 
 
 def prepare_graph(columns: DataFrame, edges: DataFrame, assets: DataFrame) -> LineageGraph:
-    """Collect every known column's capped evidence lists in one action,
-    then release the closures' checkpoints: the session keeps only the
-    driver-side lists."""
-    lists: dict[str, dict[str, list]] = {kind: {} for kind in ("impact", "reasons", "scripts", "gold")}
+    """Collect the known columns; each column's evidence lists are
+    computed when a question first names it."""
+    return LineageGraph(columns, edges, assets, frozenset(known_columns(columns)))
+
+
+def _column_evidence(
+    columns: DataFrame, edges: DataFrame, assets: DataFrame, cols: Sequence[str]
+) -> dict[str, ColumnEvidence]:
+    """Each column's capped lists, collected in one action. The closures'
+    checkpoints are released before it returns."""
+    lists: dict[str, dict[str, list]] = {c: {"impact": [], "reasons": [], "scripts": [], "gold": []} for c in cols}
     with checkpoint_scope():
-        rows = _evidence_lists(columns, edges, assets).collect()
+        rows = _evidence_lists(columns, edges, assets, cols).collect()
     for r in sorted(rows, key=lambda r: r.rank):
         if r.kind == "reasons":
             value = f"{r.key} -> {r.a}: {r.b}"
@@ -210,14 +231,13 @@ def prepare_graph(columns: DataFrame, edges: DataFrame, assets: DataFrame) -> Li
             value = (r.a, r.b)
         else:
             value = r.a
-        lists[r.kind].setdefault(r.key, []).append(value)
-    frozen = {kind: {k: tuple(v) for k, v in by_col.items()} for kind, by_col in lists.items()}
-    return LineageGraph(known=frozenset(frozen["scripts"]), **frozen)
+        lists[r.key][r.kind].append(value)
+    return {c: ColumnEvidence(**{kind: tuple(v) for kind, v in by_kind.items()}) for c, by_kind in lists.items()}
 
 
-def _evidence_lists(columns: DataFrame, edges: DataFrame, assets: DataFrame) -> DataFrame:
-    """(kind, key, rank, a, b): the four capped lists of every known column
-    `key`, ranked from 1 in show order, as one tagged union."""
+def _evidence_lists(columns: DataFrame, edges: DataFrame, assets: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """(kind, key, rank, a, b): the four capped lists of each column `key`
+    of `cols`, ranked from 1 in show order, as one tagged union."""
 
     def first(df: DataFrame, key: str, order: Sequence[str], cap: int) -> DataFrame:
         rank = F.row_number().over(Window.partitionBy(key).orderBy(*order))
@@ -233,23 +253,16 @@ def _evidence_lists(columns: DataFrame, edges: DataFrame, assets: DataFrame) -> 
         )
 
     graph = iter_checkpoint(column_graph(edges))
-    col_scripts = column_scripts(columns)
-    known = known_columns(columns)
-    impact = column_closure(column_edges(graph), known).filter(F.col("rank") <= MAX_IMPACT_SHOW)
-    reasons = first(
-        graph.join(known.withColumnRenamed("col", "src"), "src", "left_semi"),
-        "src",
-        ["dst", "reason"],
-        MAX_REASON_SHOW,
-    )
+    impact = column_closure(column_edges(graph), cols).filter(F.col("rank") <= MAX_IMPACT_SHOW)
+    reasons = first(graph.filter(F.col("src").isin(list(cols))), "src", ["dst", "reason"], MAX_REASON_SHOW)
     # each column's impacted scripts: its seed scripts plus their downstream
-    # scripts, from one closure seeded with every script
+    # scripts, from one closure seeded with the seed scripts of all of `cols`
+    seeds = column_scripts(columns).filter(F.col("col").isin(list(cols)))
     down = downstream_scripts(
-        script_edges(assets, two_hop=True),
-        col_scripts.select(F.col("script_name").alias("seed")).distinct(),
+        script_edges(assets), seeds.select(F.col("script_name").alias("seed")).distinct()
     ).select(F.col("seed").alias("script_name"), F.col("script_name").alias("down"))
-    impacted = col_scripts.unionByName(
-        col_scripts.join(down, "script_name").select("col", F.col("down").alias("script_name"))
+    impacted = seeds.unionByName(
+        seeds.join(down, "script_name").select("col", F.col("down").alias("script_name"))
     ).distinct()
     scripts = first(impacted, "col", ["script_name"], MAX_SCRIPTS_SHOW)
     gold = first(
@@ -268,7 +281,8 @@ def _evidence_lists(columns: DataFrame, edges: DataFrame, assets: DataFrame) -> 
 
 def build_evidence(question: str, lineage: LineageGraph) -> str:
     """Assemble the capped, ordered evidence text (qa/ask.py:391-450) from
-    the prepared lists, with no Spark job.
+    the question's columns' lists; it runs Spark jobs only for columns no
+    earlier question named.
 
     A multi-column question lists each column's impact and reasons, then
     the merged scripts and gold outputs of all its columns. The merge is
@@ -276,14 +290,14 @@ def build_evidence(question: str, lineage: LineageGraph) -> str:
     the union of each set's first N."""
     cands = candidate_columns(question, lineage.known)
     lines = [f"QUESTION: {question}", f"CANDIDATE COLUMNS: {', '.join(cands) or '(none)'}"]
-    for cand in cands:
-        cols = lineage.impact.get(cand, ())
-        lines.append(f"COLUMN IMPACT {cand} -> ({len(cols)}): {', '.join(cols) or '(none)'}")
-        if cand in lineage.reasons:
-            lines.append(f"ONE-HOP REASONS {cand}: " + " | ".join(lineage.reasons[cand]))
+    per_col = lineage.evidence(cands)
+    for cand, ev in zip(cands, per_col):
+        lines.append(f"COLUMN IMPACT {cand} -> ({len(ev.impact)}): {', '.join(ev.impact) or '(none)'}")
+        if ev.reasons:
+            lines.append(f"ONE-HOP REASONS {cand}: " + " | ".join(ev.reasons))
     if cands:
-        names = sorted({s for c in cands for s in lineage.scripts[c]})[:MAX_SCRIPTS_SHOW]
+        names = sorted({s for ev in per_col for s in ev.scripts})[:MAX_SCRIPTS_SHOW]
         lines.append(f"IMPACTED SCRIPTS ({len(names)}): {', '.join(names)}")
-        gold = sorted({g for c in cands for g in lineage.gold.get(c, ())})[:MAX_GOLD_SHOW]
+        gold = sorted({g for ev in per_col for g in ev.gold})[:MAX_GOLD_SHOW]
         lines.append(f"GOLD OUTPUTS ({len(gold)}): {', '.join(path for path, _ in gold)}")
     return re.sub(r"[ \t]+", " ", "\n".join(lines))

@@ -2,10 +2,11 @@
 
 It caps its script and gold-output lists AFTER ordering them: above the cap
 it lists the first names in order, not an arbitrary subset. The prepared
-graph holds every known column's capped lists, no longer than their caps;
-a multi-column question's merged lists equal a column-by-column build. A
-QASession prepares the graph once, on its first ask, and holds no
-checkpoint afterwards; later asks run only retrieval's Spark jobs.
+graph keeps each asked column's capped lists, no longer than their caps,
+for at most MAX_CACHED_COLUMNS columns; a multi-column question's merged
+lists equal a column-by-column build. A QASession prepares the graph once,
+on its first ask, and holds no checkpoint afterwards; an ask about columns
+asked before runs only retrieval's Spark jobs.
 """
 
 from __future__ import annotations
@@ -306,9 +307,10 @@ def test_asks_release_their_checkpoints(spark):
     assert _persistent_rdds(spark, collect_garbage=True) == after_first
 
 
-def test_asks_after_preparation_run_only_retrieval_jobs(spark):
+def test_asks_about_asked_columns_run_only_retrieval_jobs(spark):
     qa = QASession.build(spark)
-    qa.ask(_ASKS[2])  # prepares the graph
+    for q in _ASKS:
+        qa.ask(q)  # computes each named column's lists
 
     for q in _ASKS:
         assert _jobs_in(spark, lambda: build_evidence(q, qa.lineage)) == 0
@@ -323,44 +325,63 @@ def test_build_extracts_the_scripts_once(spark, monkeypatch):
     assert len(calls) == 1
 
 
-def test_prepare_graph_leaves_no_persisted_rdd(spark):
+def test_column_lists_leave_no_persisted_rdd(spark):
     _, columns, edges, _, assets = _wide_repo(spark)
+    lineage = prepare_graph(columns, edges, assets)
     before = _persistent_rdds(spark, collect_garbage=True)
 
-    lineage = prepare_graph(columns, edges, assets)
+    build_evidence("how do `amount` and `fee` reach the gold tables?", lineage)
 
-    assert lineage.impact["amount"]
+    assert lineage.cached["amount"].impact
     assert _persistent_rdds(spark, collect_garbage=False) == before
     assert _persistent_rdds(spark, collect_garbage=True) == before
 
 
 def _assert_capped(lineage):
-    """Every known column has a script list, and no list outgrows its cap."""
-    assert set(lineage.scripts) == lineage.known
-    for lists, cap in (
-        (lineage.impact, MAX_IMPACT_SHOW),
-        (lineage.reasons, MAX_REASON_SHOW),
-        (lineage.scripts, MAX_SCRIPTS_SHOW),
-        (lineage.gold, MAX_GOLD_SHOW),
-    ):
-        assert set(lists) <= lineage.known
-        assert all(0 < len(v) <= cap for v in lists.values())
+    """Every known column's lists, with a script each and none over its cap."""
+    for ev in lineage.evidence(sorted(lineage.known)):
+        assert ev.scripts
+        for kept, cap in (
+            (ev.impact, MAX_IMPACT_SHOW),
+            (ev.reasons, MAX_REASON_SHOW),
+            (ev.scripts, MAX_SCRIPTS_SHOW),
+            (ev.gold, MAX_GOLD_SHOW),
+        ):
+            assert len(kept) <= cap
 
 
 def test_per_column_lists_stop_at_their_caps(spark):
-    # the driver-side state is bounded by |known| x the four caps
     _, _, columns, edges, assets = _repo(spark)
     lineage = prepare_graph(columns, edges, assets)
     _assert_capped(lineage)
     assert lineage.known == {"amount", "amount_usd"}
-    assert len(lineage.scripts["amount"]) == MAX_SCRIPTS_SHOW  # 75 impacted
-    assert len(lineage.gold["amount"]) == MAX_GOLD_SHOW  # 70 gold writes
+    assert len(lineage.cached["amount"].scripts) == MAX_SCRIPTS_SHOW  # 75 impacted
+    assert len(lineage.cached["amount"].gold) == MAX_GOLD_SHOW  # 70 gold writes
 
     _, columns, edges, _, assets = _wide_repo(spark)
     lineage = prepare_graph(columns, edges, assets)
     _assert_capped(lineage)
-    assert len(lineage.impact["amount"]) == MAX_IMPACT_SHOW  # _N_WIDE + 1 downstream
-    assert len(lineage.reasons["amount"]) == MAX_REASON_SHOW  # _N_WIDE one-hop edges
+    assert len(lineage.cached["amount"].impact) == MAX_IMPACT_SHOW  # _N_WIDE + 1 downstream
+    assert len(lineage.cached["amount"].reasons) == MAX_REASON_SHOW  # _N_WIDE one-hop edges
+
+
+def test_kept_columns_are_the_most_recently_asked(spark, monkeypatch):
+    # the driver-side lists stay bounded by MAX_CACHED_COLUMNS x the four caps
+    monkeypatch.setattr(graphqa, "MAX_CACHED_COLUMNS", 2)
+    _, columns, edges, _, assets = _wide_repo(spark)
+    lineage = prepare_graph(columns, edges, assets)
+    ask = {c: f"what breaks if `{c}` changes?" for c in ("amount", "fee", "total")}
+
+    first = build_evidence(ask["amount"], lineage)
+    assert list(lineage.cached) == ["amount"]  # only the question's columns
+    build_evidence(ask["fee"], lineage)
+    assert _jobs_in(spark, lambda: build_evidence(ask["amount"], lineage)) == 0
+    build_evidence(ask["total"], lineage)  # drops `fee`, asked least recently
+    assert list(lineage.cached) == ["amount", "total"]
+
+    assert _jobs_in(spark, lambda: build_evidence(ask["fee"], lineage)) > 0
+    assert list(lineage.cached) == ["total", "fee"]
+    assert build_evidence(ask["amount"], lineage) == first
 
 
 # --- the merge of per-column lists ------------------------------------------

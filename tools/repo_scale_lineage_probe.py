@@ -31,7 +31,8 @@ the run self-checking rather than merely big:
   replicas must not perturb it.
 
 A last stage times an interactive Q&A session over the full corpus: the
-one-off lineage-graph preparation of its first ask, then two asks.
+lineage-graph preparation of its first ask (the known columns), then two
+asks, each computing the evidence lists of the columns it names first.
 
 Usage: python tools/repo_scale_lineage_probe.py [n_scripts] [workdir]
 Emits one JSON line per stage + a final summary; exit 1 on any invariant
@@ -231,7 +232,7 @@ def main() -> int:
             "path-disjoint replicas perturbed global column closure"
         )
 
-    # -- Q&A session: the one-off graph preparation, then two asks ---------
+    # -- Q&A session: the graph preparation, then two asks ---------------
     from ai_metadata_lineage_pyspark_spark.ask import QASession
     from ai_metadata_lineage_pyspark_spark.lineage.embed import embed_documents
 
