@@ -27,12 +27,17 @@ driver is the known-column set plus the capped evidence lists of at most
 graphqa.MAX_CACHED_COLUMNS columns (see graphqa.LineageGraph).
 
 The first ask() of a session collects the known columns
-(graphqa.prepare_graph). A column's evidence lists are computed on the
-first question that names it: one column closure seeded with that
-question's new columns and one script closure seeded with their scripts,
-collected in one action, the closures' checkpoints released on return. A
-question whose columns were all asked about before runs only retrieval's
-4 Spark jobs.
+(graphqa.prepare_graph) and local-checkpoints the retrieval index: the
+embedded corpus joined once to its refs and texts, one more corpus-sized
+checkpoint held for the session (QASession.index). A column's evidence
+lists are computed on the first question that names it: one column closure
+seeded with that question's new columns and one script closure seeded with
+their scripts, collected in one action, the closures' checkpoints released
+on return. Retrieval is one Spark job per ask: the index is scored and
+ordered-limited to the top k (a per-partition top-k, then a merge), with no
+join and no exchange of the corpus. A question whose columns were all asked
+about before runs only that job; a question whose vector is zero (no
+tokens, or tokens that cancel) retrieves nothing and runs none.
 """
 
 from __future__ import annotations
@@ -44,7 +49,7 @@ from functools import cached_property
 from pyspark.sql import DataFrame, SparkSession
 
 from .lineage.corpus import build_corpus
-from .lineage.embed import TOP_K, embed_documents, hash_embed, retrieve_top_k
+from .lineage.embed import TOP_K, embed_documents, hash_embed, top_k
 from .lineage.enrich import MockModelClient, ModelClient, answer_question
 from .lineage.extract import assets_table, columns_table, dataframes_table
 from .lineage.graphqa import LineageGraph, build_evidence, prepare_graph
@@ -60,8 +65,10 @@ class QASession:
     from one extraction of the scripts (the reference loads outputs/ + the
     FAISS store once at startup, qa/ask.py:462-471). The first ask()
     prepares the lineage graph over them, which keeps each asked column's
-    capped evidence lists for the session; an ask() about columns already
-    asked runs only retrieval's jobs (see the module docstring)."""
+    capped evidence lists for the session, and checkpoints the retrieval
+    index, one more corpus-sized checkpoint held for the session. An
+    ask() about columns already asked runs only retrieval's one Spark job
+    (see the module docstring)."""
 
     columns: DataFrame
     edges: DataFrame
@@ -76,6 +83,17 @@ class QASession:
         block, only the known columns and at most MAX_CACHED_COLUMNS
         columns' capped lists."""
         return prepare_graph(self.columns, self.edges, self.assets)
+
+    @cached_property
+    def index(self) -> DataFrame:
+        """The retrieval index, built on first use: each embedded doc with
+        its ref and text, local-checkpointed once so that an ask's top-k
+        scans it with no join."""
+        return (
+            self.embedded.join(self.corpus, "doc_id")
+            .select("doc_id", "ref", "text", "embedding")
+            .localCheckpoint(eager=True)
+        )
 
     @classmethod
     def build(cls, spark: SparkSession, client: ModelClient | None = None) -> "QASession":
@@ -95,14 +113,12 @@ class QASession:
         )
 
     def retrieve(self, question: str, k: int = TOP_K) -> list[tuple[str, str]]:
-        """Top-k corpus docs for the question: (ref, text) in rank order."""
-        top = retrieve_top_k(self.embedded, hash_embed(question), k=k)
-        rows = (
-            top.join(self.corpus, "doc_id")
-            .orderBy("rank")
-            .select("ref", "text")
-            .collect()
-        )
+        """Top-k corpus docs for the question: (ref, text) in rank order.
+        A zero question vector has no cosine ranking: no docs, no job."""
+        vec = hash_embed(question)
+        if not any(vec):
+            return []
+        rows = top_k(self.index, vec, k=k).select("ref", "text").collect()
         return [(r.ref, r.text) for r in rows]
 
     def ask(self, question: str) -> dict:

@@ -12,8 +12,11 @@ IndexFlatL2 sidecar files with positional ids (embed_index.py:23-46). Here:
   deterministic hash-based embedder below (the "LLM never defines truth"
   rule keeps it out of deterministic artifacts);
 * retrieval is exact brute-force top-k (operators/similarity.py pattern) —
-  A36's `index.search(q, 25)` as a broadcast join + windowed rank, or the
-  LSH-bucketed variant at scale.
+  A36's `index.search(q, 25)` as one ordered limit over the scored rows,
+  which Spark plans as a `TakeOrderedAndProject`: a top-k per partition,
+  then a merge of those k-row lists (the REPOSE shape), so no exchange of
+  the whole corpus and no global window. The rank is numbered afterwards,
+  over the k rows kept.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ import math
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_expr
@@ -64,14 +67,39 @@ def embed_documents(docs: DataFrame, text_col: str = "text", id_col: str = "doc_
     return docs.select(id_col, text_col).mapInPandas(run, schema=out_schema)
 
 
+def _rank_order(id_col: str) -> list[Column]:
+    """Highest score first; equal scores by ascending id."""
+    return [F.col("score").desc(), F.col(id_col).asc()]
+
+
+def top_k(
+    embedded: DataFrame, query_vec: list[float], k: int = TOP_K, id_col: str = "doc_id"
+) -> DataFrame:
+    """The k rows of `embedded` closest to one query vector by cosine, every
+    column kept plus `score`, ordered (score DESC, id ASC): one ordered limit.
+
+    The query vector must have a nonzero norm: its cosine is undefined and,
+    under ANSI mode, fails inside an executor task as DIVIDE_BY_ZERO."""
+    if not any(query_vec):
+        raise ValueError("query vector has zero norm: no cosine ranking exists")
+    lit_vec = F.array(*[F.lit(float(v)) for v in query_vec])
+    score = F.expr(cosine_expr("embedding", "query_vec"))
+    return (
+        embedded.withColumn("query_vec", lit_vec)
+        .withColumn("score", score)
+        .drop("query_vec")
+        .orderBy(*_rank_order(id_col))
+        .limit(k)
+    )
+
+
 def retrieve_top_k(
     embedded: DataFrame, query_vec: list[float], k: int = TOP_K, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Exact top-k docs by cosine against one query vector."""
-    lit_vec = F.array(*[F.lit(float(v)) for v in query_vec])
-    scored = embedded.withColumn("query_vec", lit_vec).select(
-        id_col,
-        F.expr(cosine_expr("embedding", "query_vec")).alias("score"),
+    """Exact top-k docs by cosine against one query vector: (id, score, rank).
+    The rank window numbers only the k rows the ordered limit keeps, in the
+    limit's own order (score DESC, id ASC)."""
+    w = Window.orderBy(*_rank_order(id_col))
+    return top_k(embedded, query_vec, k, id_col).select(
+        id_col, "score", F.row_number().over(w).alias("rank")
     )
-    w = Window.orderBy(F.col("score").desc(), F.col(id_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

@@ -1243,6 +1243,12 @@ def bpe_train_merges_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     }
     merges: list[tuple[int, str, str, int]] = []
+
+    def log_round(r: int, t0: float) -> None:
+        if timings_path:
+            with open(timings_path, "a") as fh:
+                fh.write(json.dumps({"round": r, "sec": round(time.time() - t0, 3)}) + "\n")
+
     for r in range(1, _BPE_INC_ROUNDS + 1):
         t0 = time.time()
         if not counts:
@@ -1266,6 +1272,7 @@ def bpe_train_merges_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             # no later argmax consumes this round's delta — skip the delta
             # build (and the final vocab checkpoint below with it): the
             # last-round rebuild was pure wasted work (r14 advice)
+            log_round(r, t0)
             break
         # ONE Spark action per round: old-pair decrements and new-pair
         # increments explode from a SINGLE scan of the affected words
@@ -1317,9 +1324,7 @@ def bpe_train_merges_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # recovery replays at most that many narrow scans.
         if r % _VOCAB_CKPT_EVERY == 0:
             vocab = vocab.coalesce(4).checkpoint()
-        if timings_path:
-            with open(timings_path, "a") as fh:
-                fh.write(json.dumps({"round": r, "sec": round(time.time() - t0, 3)}) + "\n")
+        log_round(r, t0)
     out = spark.createDataFrame(
         merges, "round bigint, left_tok string, right_tok string, n_occurrences bigint"
     )

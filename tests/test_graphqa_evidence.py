@@ -4,23 +4,28 @@ It caps its script and gold-output lists AFTER ordering them: above the cap
 it lists the first names in order, not an arbitrary subset. The prepared
 graph keeps each asked column's capped lists, no longer than their caps,
 for at most MAX_CACHED_COLUMNS columns; a multi-column question's merged
-lists equal a column-by-column build. A QASession prepares the graph once,
-on its first ask, and holds no checkpoint afterwards; an ask about columns
-asked before runs only retrieval's Spark jobs.
+lists equal a column-by-column build. A QASession prepares the graph and
+its retrieval index once, on its first ask, and holds no other checkpoint
+afterwards; an ask about columns asked before runs only retrieval's one
+Spark job, whose top-k equals a brute-force cosine ranking.
 """
 
 from __future__ import annotations
 
 import gc
 import itertools
+import math
 import re
+import string
 import time
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from ai_metadata_lineage_pyspark_spark.ask import QASession
 from ai_metadata_lineage_pyspark_spark.lineage import graphqa, queries, stitch
+from ai_metadata_lineage_pyspark_spark.lineage.embed import DIM, TOP_K, hash_embed, retrieve_top_k
 from ai_metadata_lineage_pyspark_spark.lineage.graphqa import (
     MAX_GOLD_SHOW,
     MAX_IMPACT_SHOW,
@@ -314,7 +319,35 @@ def test_asks_about_asked_columns_run_only_retrieval_jobs(spark):
 
     for q in _ASKS:
         assert _jobs_in(spark, lambda: build_evidence(q, qa.lineage)) == 0
-        assert _jobs_in(spark, lambda: qa.ask(q)) == _jobs_in(spark, lambda: qa.retrieve(q))
+        assert _jobs_in(spark, lambda: qa.ask(q)) == _jobs_in(spark, lambda: qa.retrieve(q)) == 1
+
+
+def _cancelling_tokens() -> str:
+    """Two tokens hashed to one bucket with opposite signs: a question of
+    both embeds to the zero vector although it has tokens."""
+    seen = {}
+    for i in itertools.count():
+        tok = f"t{i}"
+        vec = hash_embed(tok)
+        bucket = next(b for b, v in enumerate(vec) if v)
+        if -vec[bucket] in seen.get(bucket, {}):
+            return f"{seen[bucket][-vec[bucket]]} {tok}"
+        seen.setdefault(bucket, {})[vec[bucket]] = tok
+
+
+def test_a_zero_question_vector_retrieves_nothing(spark):
+    qa = QASession.build(spark)
+    qa.ask(_ASKS[0])
+    for q in ("   ", _cancelling_tokens()):
+        assert not any(hash_embed(q))
+        hits = []
+        assert _jobs_in(spark, lambda: hits.extend(qa.retrieve(q))) == 0
+        assert hits == []
+        result = qa.ask(q)
+        assert result["debug"]["retrieved_docs"] == 0
+        assert "CANDIDATE COLUMNS: (none)" in result["evidence"].split("\n")
+    with pytest.raises(ValueError, match="zero norm"):
+        retrieve_top_k(qa.embedded, [0.0] * DIM)
 
 
 def test_build_extracts_the_scripts_once(spark, monkeypatch):
@@ -444,3 +477,56 @@ def test_merged_lists_equal_column_by_column_evidence(spark, monkeypatch, owners
         question = "what if " + " and ".join(f"`{c}`" for c in cands) + " change"
         expected = _reference_evidence(question, cands, col_rows, col_edges, asset_rows)
         assert build_evidence(question, lineage) == expected
+
+
+# --- retrieval: the session index's top-k ------------------------------------
+
+
+def _fold_cosine(a, b) -> float:
+    """cosine_expr in Python: sequential double folds, then one division."""
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot = dot + x * y
+    for x in a:
+        na = na + x * x
+    for y in b:
+        nb = nb + y * y
+    return dot / (math.sqrt(na) * math.sqrt(nb))
+
+
+@pytest.fixture(scope="module")
+def retrieval(spark):
+    """A session over the fixture corpus, its embeddings spread over three
+    partitions so that the top-k merges partition-local lists; and the
+    corpus docs as (doc_id, ref, text, embedding), read without the index."""
+    base = QASession.build(spark)
+    qa = QASession(
+        columns=base.columns,
+        edges=base.edges,
+        assets=base.assets,
+        corpus=base.corpus,
+        embedded=base.embedded.repartition(3),
+    )
+    refs = {r.doc_id: (r.ref, r.text) for r in base.corpus.collect()}
+    docs = [(r.doc_id, *refs[r.doc_id], list(r.embedding)) for r in base.embedded.collect()]
+    return qa, docs
+
+
+_FREE_WORDS = st.text(alphabet=string.ascii_lowercase + "_`", min_size=1, max_size=8)
+
+
+@given(data=st.data())
+@settings(max_examples=30, deadline=None)
+def test_retrieve_equals_a_brute_force_ranking(retrieval, data):
+    qa, docs = retrieval
+    assert qa.index.rdd.getNumPartitions() > 1
+    vocab = sorted({t for _, _, text, _ in docs for t in text.lower().split()})
+    words = data.draw(st.lists(st.one_of(st.sampled_from(vocab), _FREE_WORDS), max_size=6))
+    question = " ".join(words)
+
+    vec = hash_embed(question)
+    expected = []
+    if any(vec):
+        ranked = sorted((-_fold_cosine(emb, vec), doc_id, ref, text) for doc_id, ref, text, emb in docs)
+        expected = [(ref, text) for _, _, ref, text in ranked[:TOP_K]]
+    assert qa.retrieve(question) == expected

@@ -961,6 +961,22 @@ def test_bpe_incremental_prefix_equals_full_trainer(spark, sf_dir):
     assert all(v[3] > 0 for v in inc.values())
 
 
+def test_bpe_incremental_timings_cover_every_round(spark, sf_dir, monkeypatch, tmp_path):
+    # the last round skips its delta build but still logs its wall time
+    import json
+
+    from ai_metadata_lineage_pyspark_spark.operators import search
+
+    monkeypatch.setattr(search, "_BPE_INC_ROUNDS", 3)
+    timings = tmp_path / "bpe_timings.jsonl"
+    monkeypatch.setenv("SPARK_GRAFT_BPE_TIMINGS", str(timings))
+
+    rounds = sorted(r.round for r in search.bpe_train_merges_incremental(spark, sf_dir).collect())
+    logged = [json.loads(line)["round"] for line in timings.read_text().splitlines()]
+    assert rounds == [1, 2, 3]
+    assert logged == rounds
+
+
 def test_simhash_vectorized_equals_expression_fold(spark, sf_dir):
     # the vectorized mapInPandas fingerprint (r9 default) must reproduce
     # the expression fold bit-for-bit at BOTH widths: integer +-1 sums are

@@ -627,8 +627,9 @@ GLOBAL_WINDOW_ALLOWLIST = {
         "(per-partition sketch build + merge of k-mins, never a global sort)"
     ),
     "lineage_retrieval_topk": (
-        "bounded-input: ranks the top-k row set of the lineage corpus "
-        "(script-count-sized — dozens of docs per repo, not a fact table)"
+        "bounded-input: the rank window sees only the k rows the ordered "
+        "limit keeps (TakeOrderedAndProject: a top-k per partition, then a "
+        "merge), never the scored corpus"
     ),
     "quality_score_rank_correlation": (
         "twinned: exact Spearman rho IS a total-order rank statistic "

@@ -32,7 +32,9 @@ the run self-checking rather than merely big:
 
 A last stage times an interactive Q&A session over the full corpus: the
 lineage-graph preparation of its first ask (the known columns), then two
-asks, each computing the evidence lists of the columns it names first.
+asks, each computing the evidence lists of the columns it names first. It
+also prints the Spark jobs of one repeated retrieval per question and a
+hash of the retrieved refs, which a retrieval change must keep.
 
 Usage: python tools/repo_scale_lineage_probe.py [n_scripts] [workdir]
 Emits one JSON line per stage + a final summary; exit 1 on any invariant
@@ -246,9 +248,20 @@ def main() -> int:
         t1 = time.time()
         qa.ask(q)
         ask_s.append(round(time.time() - t1, 2))
+    total_s = time.time() - t0
+    sc = spark.sparkContext
+    retrieve_jobs, refs = [], []
+    for i, q in enumerate(ASK_QUESTIONS):
+        group = f"probe-retrieve-{i}"
+        sc.setJobGroup(group, group)
+        refs.append([ref for ref, _ in qa.retrieve(q)])
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        retrieve_jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
     _emit(stage="ask", prepare_s=round(prepare_s, 2), ask_s=ask_s,
-          prepare_plus_two_asks_s=round(time.time() - t0, 2),
-          known_columns=len(lineage.known))
+          prepare_plus_two_asks_s=round(total_s, 2),
+          known_columns=len(lineage.known), retrieve_jobs=retrieve_jobs,
+          retrieved_sha256_16=hashlib.sha256(json.dumps(refs).encode()).hexdigest()[:16])
 
     _emit(stage="summary", scripts=n_scripts, failures=failures,
           ok=not failures)
