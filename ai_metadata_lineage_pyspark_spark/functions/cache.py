@@ -47,17 +47,16 @@ _MEMO: dict[tuple, DataFrame] = {}
 
 
 # Fitted-model memo: a second, longer-lived tier for MATERIALIZED artifacts
-# (e.g. the 6-row BPE merge table `bpe_train_merges` fits) that are
-# collected to the driver and rebuilt as literal DataFrames. Unlike _MEMO
-# entries these hold ZERO executor storage — they are driver-side literals —
-# so the leak concern that motivates release_persisted() does not apply and
-# release_persisted() deliberately leaves them alone: a bench steady run of
-# `bpe_apply_encode` prices ENCODING (the operator's own work), not a
-# re-fit of a deterministic model the same process already fitted, exactly
-# as a production job ships a fitted tokenizer rather than refitting per
-# query. `release_models()` ends the scope explicitly (bench calls it after
-# each suite; a fixture swap under the same sf_dir path is out of contract,
-# as for _MEMO).
+# held as driver-side literal DataFrames (e.g. the 6-row BPE merge table
+# `bpe_train_merges` fits). Unlike _MEMO entries these hold ZERO executor
+# storage, so the leak concern that motivates release_persisted() does not
+# apply and release_persisted() deliberately leaves them alone: a bench
+# steady run of `bpe_apply_encode` prices ENCODING (the operator's own
+# work), not a re-fit of a deterministic model the same process already
+# fitted, exactly as a production job ships a fitted tokenizer rather than
+# refitting per query. `release_models()` ends the scope explicitly (bench
+# calls it after each suite; a fixture swap under the same sf_dir path is
+# out of contract, as for _MEMO).
 #
 # A third tier lives in functions/io.py: `_SCHEMAS`, one fixture table's
 # inferred StructType per path, so every read after the first runs no
@@ -115,20 +114,3 @@ def release_persisted() -> None:
         spark, name = _STREAM_VIEWS.pop()
         spark.catalog.dropTempView(name)
 
-
-def persist_scope_mark() -> int:
-    """Token for `release_persisted_since`: marks the current top of the
-    scoped-persist stack so a nested fit (e.g. the BPE trainer inside
-    `_fitted_bpe_merges`) can release ONLY its own persists."""
-    return len(_PERSISTED)
-
-
-def release_persisted_since(mark: int) -> None:
-    """Unpersist only the DataFrames registered after `mark`. Unlike
-    `release_persisted()` this leaves the cross-query `_MEMO` tier and any
-    earlier scoped persists intact — so a model fit running between two
-    consumers of a memoized subgraph (per-advice r9: bpe_apply_encode
-    between two neardup-label consumers) cannot silently drop the memo
-    and force a recompute."""
-    while len(_PERSISTED) > mark:
-        _PERSISTED.pop().unpersist()

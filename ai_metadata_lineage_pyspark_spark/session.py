@@ -48,9 +48,9 @@ def get_spark(app_name: str = "ai-metadata-lineage-pyspark-spark", shuffle_parti
 def ensure_checkpoint_dir(spark: SparkSession) -> None:
     """Set a RELIABLE checkpoint dir if none is configured (idempotent).
 
-    Iterative fits (bpe_train_merges_incremental) cut their lineage with
-    `DataFrame.checkpoint()` — a replayable on-disk materialization — rather
-    than `localCheckpoint()`, whose executor-memory blocks are lost (and the
+    Iterative fits (the BPE fit, operators/search.py::_bpe_fit) cut their
+    lineage with `DataFrame.checkpoint()` — a replayable on-disk
+    materialization — rather than `localCheckpoint()`, whose executor-memory blocks are lost (and the
     job with them) on any executor failure mid-iteration. Locally this is a
     temp dir; on a cluster, point SPARK_GRAFT_CHECKPOINT_DIR at HDFS/S3 so
     checkpoints survive executor loss.

@@ -31,6 +31,10 @@ FAST_SUBSET = [
     "kmeans_iterate",         # iterative ML, integer-exact Lloyd round
     "incremental_corpus_dedup",  # batch-vs-corpus dedup
     "lexical_search_topk",    # sparse retrieval
+    "bpe_train_merges",       # tokenizer fit, sequential
+    "bpe_train_merges_incremental",  # tokenizer fit, 24 rounds
+    "bpe_train_merges_batched",  # tokenizer fit, batched picks
+    "bpe_apply_encode",       # fitted-tokenizer encode
 ]
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
