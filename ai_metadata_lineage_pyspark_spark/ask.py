@@ -22,22 +22,24 @@ Usage:
     python -m ai_metadata_lineage_pyspark_spark.ask
 
 Driver-side by design: the heavy lifting (extraction, graph closure,
-embedding, top-k) stays in Spark jobs, and what the session keeps on the
-driver is the known-column set plus the capped evidence lists of at most
-graphqa.MAX_CACHED_COLUMNS columns (see graphqa.LineageGraph).
+embedding) stays in Spark jobs. What the session keeps on the driver is the
+known-column set, the capped evidence lists of at most
+graphqa.MAX_CACHED_COLUMNS columns (see graphqa.LineageGraph), and the
+retrieval index: a flat exact index, as the reference's FAISS
+IndexFlatL2 is, of at most embed.MAX_INDEX_DOCS docs.
 
 The first ask() of a session collects the known columns
-(graphqa.prepare_graph) and local-checkpoints the retrieval index: the
-embedded corpus joined once to its refs and texts, one more corpus-sized
-checkpoint held for the session (QASession.index). A column's evidence
-lists are computed on the first question that names it: one column closure
-seeded with that question's new columns and one script closure seeded with
-their scripts, collected in one action, the closures' checkpoints released
-on return. Retrieval is one Spark job per ask: the index is scored and
-ordered-limited to the top k (a per-partition top-k, then a merge), with no
-join and no exchange of the corpus. A question whose columns were all asked
-about before runs only that job; a question whose vector is zero (no
-tokens, or tokens that cancel) retrieves nothing and runs none.
+(graphqa.prepare_graph) and the retrieval index (QASession.index): the
+embedded corpus joined once to its refs and texts and collected by one
+action into an embed.FlatIndex, with no checkpoint held. A column's
+evidence lists are computed on the first question that names it: one
+column closure seeded with that question's new columns and one script
+closure seeded with their scripts, collected in one action, the closures'
+checkpoints released on return. Retrieval runs no Spark job: the index
+scores every doc in-process, bit-identically to embed.top_k's cosine, and
+keeps the same top k (score DESC, doc_id ASC). A question whose columns
+were all asked about before runs no Spark job at all; a question whose
+vector is zero (no tokens, or tokens that cancel) retrieves nothing.
 """
 
 from __future__ import annotations
@@ -49,7 +51,7 @@ from functools import cached_property
 from pyspark.sql import DataFrame, SparkSession
 
 from .lineage.corpus import build_corpus
-from .lineage.embed import TOP_K, embed_documents, hash_embed, top_k
+from .lineage.embed import TOP_K, FlatIndex, embed_documents, hash_embed
 from .lineage.enrich import MockModelClient, ModelClient, answer_question
 from .lineage.extract import assets_table, columns_table, dataframes_table
 from .lineage.graphqa import LineageGraph, build_evidence, prepare_graph
@@ -65,10 +67,9 @@ class QASession:
     from one extraction of the scripts (the reference loads outputs/ + the
     FAISS store once at startup, qa/ask.py:462-471). The first ask()
     prepares the lineage graph over them, which keeps each asked column's
-    capped evidence lists for the session, and checkpoints the retrieval
-    index, one more corpus-sized checkpoint held for the session. An
-    ask() about columns already asked runs only retrieval's one Spark job
-    (see the module docstring)."""
+    capped evidence lists for the session, and collects the retrieval
+    index to the driver. An ask() about columns already asked runs no
+    Spark job (see the module docstring)."""
 
     columns: DataFrame
     edges: DataFrame
@@ -85,15 +86,10 @@ class QASession:
         return prepare_graph(self.columns, self.edges, self.assets)
 
     @cached_property
-    def index(self) -> DataFrame:
+    def index(self) -> FlatIndex:
         """The retrieval index, built on first use: each embedded doc with
-        its ref and text, local-checkpointed once so that an ask's top-k
-        scans it with no join."""
-        return (
-            self.embedded.join(self.corpus, "doc_id")
-            .select("doc_id", "ref", "text", "embedding")
-            .localCheckpoint(eager=True)
-        )
+        its ref and text, collected once to the driver."""
+        return FlatIndex.collect(self.embedded.join(self.corpus, "doc_id"))
 
     @classmethod
     def build(cls, spark: SparkSession, client: ModelClient | None = None) -> "QASession":
@@ -114,12 +110,12 @@ class QASession:
 
     def retrieve(self, question: str, k: int = TOP_K) -> list[tuple[str, str]]:
         """Top-k corpus docs for the question: (ref, text) in rank order.
-        A zero question vector has no cosine ranking: no docs, no job."""
+        A zero question vector has no cosine ranking: no docs."""
         vec = hash_embed(question)
         if not any(vec):
             return []
-        rows = top_k(self.index, vec, k=k).select("ref", "text").collect()
-        return [(r.ref, r.text) for r in rows]
+        index = self.index
+        return [(index.refs[i], index.texts[i]) for i, _ in index.search(vec, k)]
 
     def ask(self, question: str) -> dict:
         """One Q&A round: returns answer + evidence + debug counters."""

@@ -11,12 +11,22 @@ IndexFlatL2 sidecar files with positional ids (embed_index.py:23-46). Here:
   replacing the reference's sequential loop, SURVEY.md §4); tests use the
   deterministic hash-based embedder below (the "LLM never defines truth"
   rule keeps it out of deterministic artifacts);
-* retrieval is exact brute-force top-k (operators/similarity.py pattern) —
-  A36's `index.search(q, 25)` as one ordered limit over the scored rows,
-  which Spark plans as a `TakeOrderedAndProject`: a top-k per partition,
-  then a merge of those k-row lists (the REPOSE shape), so no exchange of
-  the whole corpus and no global window. The rank is numbered afterwards,
-  over the k rows kept.
+* distributed retrieval is exact brute-force top-k (operators/similarity.py
+  pattern) — A36's `index.search(q, 25)` as one ordered limit over the
+  scored rows, which Spark plans as a `TakeOrderedAndProject`: a top-k per
+  partition, then a merge of those k-row lists (the REPOSE shape), so no
+  exchange of the whole corpus and no global window. The rank is numbered
+  afterwards, over the k rows kept;
+* interactive retrieval is a driver-resident exact flat index (`FlatIndex`),
+  as the reference's FAISS index is: collected once per Q&A session, then
+  searched in-process with no Spark job. Its scores are bit-identical to
+  `cosine_expr`, so it ranks exactly as `top_k` does, ties included: the
+  dot product and both squared norms are sequential double folds over the
+  dimensions in index order, one IEEE multiply and one IEEE add per term,
+  exactly the order of Spark's `aggregate(zip_with(...), 0D, acc + v)`
+  (vectorised across docs, never a BLAS dot, which reassociates the sum),
+  then `dot / (sqrt(na) * sqrt(nb))` with correctly rounded sqrt and
+  division on both sides. The float embeddings widen to double exactly.
 """
 
 from __future__ import annotations
@@ -24,7 +34,9 @@ from __future__ import annotations
 import hashlib
 import math
 from collections.abc import Iterator
+from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -103,3 +115,83 @@ def retrieve_top_k(
     return top_k(embedded, query_vec, k, id_col).select(
         id_col, "score", F.row_number().over(w).alias("rank")
     )
+
+
+class RetrievalIndexTooLarge(RuntimeError):
+    """The corpus holds more than `MAX_INDEX_DOCS` docs: the session's flat
+    index stops instead of running the driver out of memory."""
+
+
+# A doc costs 8 * DIM = 512 B of float64 embedding plus its id (a 64-char
+# sha256 hex), ref and text as Python strings, a few hundred bytes more, so
+# 500,000 docs is 256 MB of embeddings and about 0.5 GB in all of the 8g
+# default driver.
+MAX_INDEX_DOCS = 500_000
+
+
+def _fold(pairs: Iterator[tuple]) -> float | np.ndarray:
+    """Sum of x * y over `pairs`, left to right from 0.0: `aggregate`'s
+    sequential double fold, on floats or elementwise on arrays."""
+    acc = 0.0
+    for x, y in pairs:
+        acc = acc + x * y
+    return acc
+
+
+@dataclass(frozen=True)
+class FlatIndex:
+    """Docs held on the driver for exact in-process cosine top-k (FAISS's
+    IndexFlat role): row i is doc ids[i], with refs[i], texts[i], embedding
+    `embeddings[i]` and `norms[i]` = sqrt of its sequential sum of squares.
+    The embeddings are stored column-major, so each fold step reads one
+    contiguous dimension across all docs."""
+
+    ids: list[str]
+    refs: list[str]
+    texts: list[str]
+    embeddings: np.ndarray
+    norms: np.ndarray
+
+    @classmethod
+    def collect(cls, docs: DataFrame) -> "FlatIndex":
+        """Collect (doc_id, ref, text, embedding) rows, at most
+        MAX_INDEX_DOCS + 1 of them; raises RetrievalIndexTooLarge when the
+        cap is exceeded and ValueError when a doc's embedding is zero (no
+        cosine exists; `top_k` fails on it too, as DIVIDE_BY_ZERO)."""
+        rows = docs.select("doc_id", "ref", "text", "embedding").limit(MAX_INDEX_DOCS + 1).collect()
+        if len(rows) > MAX_INDEX_DOCS:
+            raise RetrievalIndexTooLarge(
+                f"retrieval index reached {len(rows)} docs, over the driver cap"
+                f" MAX_INDEX_DOCS={MAX_INDEX_DOCS}"
+            )
+        emb = np.asfortranarray(
+            np.array([r.embedding for r in rows], dtype=np.float64).reshape(len(rows), DIM)
+        )
+        cols = [emb[:, j] for j in range(DIM)]
+        norms = np.sqrt(_fold(zip(cols, cols)))
+        if not norms.all():
+            zero = rows[int(np.argmin(norms))].doc_id
+            raise ValueError(f"doc {zero} has a zero-norm embedding: no cosine ranking exists")
+        return cls(
+            ids=[r.doc_id for r in rows],
+            refs=[r.ref for r in rows],
+            texts=[r.text for r in rows],
+            embeddings=emb,
+            norms=norms,
+        )
+
+    def search(self, query_vec: list[float], k: int = TOP_K) -> list[tuple[int, float]]:
+        """(row, score) of the k docs `top_k` would return for the query, in
+        its order (score DESC, id ASC), with its scores to the bit."""
+        if not any(query_vec):
+            raise ValueError("query vector has zero norm: no cosine ranking exists")
+        q = [float(v) for v in query_vec]
+        dot = _fold(zip((self.embeddings[:, j] for j in range(DIM)), q))
+        scores = dot / (self.norms * math.sqrt(_fold(zip(q, q))))
+        n = len(self.ids)
+        kept = np.arange(n)
+        if 0 < k < n:
+            kth = np.partition(scores, n - k)[n - k]
+            kept = np.flatnonzero(scores >= kth)  # every doc tied with the k-th too
+        ranked = sorted(kept.tolist(), key=lambda i: (-scores[i], self.ids[i]))
+        return [(i, float(scores[i])) for i in ranked[:k]]

@@ -15,6 +15,11 @@ import re
 from pyspark.sql import DataFrame
 
 
+# An operator line of a plan string: tree-drawing characters, an optional
+# whole-stage-codegen stage id `*(N) `, then the operator name.
+_OPERATOR_LINE = re.compile(r"^[\s:+\-]*(?:\*\(\d+\) )?(\w[\w.]*)", re.M)
+
+
 def physical_plan(df: DataFrame) -> str:
     """Executed (AQE-final-ish initial) physical plan as a string."""
     return df._jdf.queryExecution().executedPlan().toString()
@@ -22,8 +27,7 @@ def physical_plan(df: DataFrame) -> str:
 
 def operators(df: DataFrame) -> list[str]:
     """Operator names appearing in the physical plan, outermost first."""
-    names = re.findall(r"^[\s:+*()-]*(\w[\w.]*)", physical_plan(df), re.M)
-    return [n for n in names if n]
+    return _OPERATOR_LINE.findall(physical_plan(df))
 
 
 def has_operator(df: DataFrame, name: str) -> bool:
@@ -257,6 +261,6 @@ def operator_histogram(df: DataFrame) -> dict[str, int]:
     next to each ledger fingerprint so a drift diff is readable (which
     NODES changed) without committing full plan texts."""
     hist: dict[str, int] = {}
-    for m in re.finditer(r"^[\s:+*()\-]*(\w[\w.]*)", normalized_plan(df), re.M):
-        hist[m.group(1)] = hist.get(m.group(1), 0) + 1
+    for name in _OPERATOR_LINE.findall(normalized_plan(df)):
+        hist[name] = hist.get(name, 0) + 1
     return dict(sorted(hist.items()))

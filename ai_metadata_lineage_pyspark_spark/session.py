@@ -86,9 +86,10 @@ def iter_checkpoint(df, eager: bool = True):
     `DataFrame.checkpoint()` on the checkpoint filesystem
     (SPARK_GRAFT_CHECKPOINT_DIR → HDFS/S3), so an executor loss mid-
     iteration replays from the last round's files instead of failing the
-    job. The incremental and batched BPE fits reliably checkpoint their
-    distributed vocab table UNCONDITIONALLY, every few rounds; their pair
-    counts and merges live on the driver and are not checkpointed.
+    job. The one BPE fit behind all three trainers (`search._bpe_fit`)
+    reliably checkpoints its distributed vocab table UNCONDITIONALLY, every
+    few rounds; its pair counts and merges live on the driver and are not
+    checkpointed.
     Everything else keeps the local default because the swap is a
     deploy-time decision, not a per-operator one.
 

@@ -5,14 +5,16 @@ it lists the first names in order, not an arbitrary subset. The prepared
 graph keeps each asked column's capped lists, no longer than their caps,
 for at most MAX_CACHED_COLUMNS columns; a multi-column question's merged
 lists equal a column-by-column build. A QASession prepares the graph and
-its retrieval index once, on its first ask, and holds no other checkpoint
-afterwards; an ask about columns asked before runs only retrieval's one
-Spark job, whose top-k equals a brute-force cosine ranking.
+collects its retrieval index once, on its first ask, and holds no
+checkpoint for either; an ask about columns asked before runs no Spark job.
+Its retrieval equals a brute-force cosine ranking, and `retrieve_top_k`'s
+distributed ranking to the bit, ties included.
 """
 
 from __future__ import annotations
 
 import gc
+import hashlib
 import itertools
 import math
 import re
@@ -24,8 +26,15 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from ai_metadata_lineage_pyspark_spark.ask import QASession
-from ai_metadata_lineage_pyspark_spark.lineage import graphqa, queries, stitch
-from ai_metadata_lineage_pyspark_spark.lineage.embed import DIM, TOP_K, hash_embed, retrieve_top_k
+from ai_metadata_lineage_pyspark_spark.lineage import embed, graphqa, queries, stitch
+from ai_metadata_lineage_pyspark_spark.lineage.embed import (
+    DIM,
+    TOP_K,
+    RetrievalIndexTooLarge,
+    embed_documents,
+    hash_embed,
+    retrieve_top_k,
+)
 from ai_metadata_lineage_pyspark_spark.lineage.graphqa import (
     MAX_GOLD_SHOW,
     MAX_IMPACT_SHOW,
@@ -301,6 +310,10 @@ def _persistent_rdds(spark, collect_garbage: bool) -> set[int]:
 
 def test_asks_release_their_checkpoints(spark):
     qa = QASession.build(spark)
+    before_index = _persistent_rdds(spark, collect_garbage=True)
+    assert qa.index.ids  # collected to the driver, not checkpointed
+    assert _persistent_rdds(spark, collect_garbage=False) == before_index
+
     qa.ask(_ASKS[0])  # prepares the graph, which the session keeps
     after_first = _persistent_rdds(spark, collect_garbage=True)
 
@@ -312,14 +325,14 @@ def test_asks_release_their_checkpoints(spark):
     assert _persistent_rdds(spark, collect_garbage=True) == after_first
 
 
-def test_asks_about_asked_columns_run_only_retrieval_jobs(spark):
+def test_asks_about_asked_columns_run_no_jobs(spark):
     qa = QASession.build(spark)
     for q in _ASKS:
-        qa.ask(q)  # computes each named column's lists
+        qa.ask(q)  # computes each named column's lists, and the index once
 
     for q in _ASKS:
         assert _jobs_in(spark, lambda: build_evidence(q, qa.lineage)) == 0
-        assert _jobs_in(spark, lambda: qa.ask(q)) == _jobs_in(spark, lambda: qa.retrieve(q)) == 1
+        assert _jobs_in(spark, lambda: qa.ask(q)) == _jobs_in(spark, lambda: qa.retrieve(q)) == 0
 
 
 def _cancelling_tokens() -> str:
@@ -519,7 +532,7 @@ _FREE_WORDS = st.text(alphabet=string.ascii_lowercase + "_`", min_size=1, max_si
 @settings(max_examples=30, deadline=None)
 def test_retrieve_equals_a_brute_force_ranking(retrieval, data):
     qa, docs = retrieval
-    assert qa.index.rdd.getNumPartitions() > 1
+    assert qa.embedded.rdd.getNumPartitions() > 1
     vocab = sorted({t for _, _, text, _ in docs for t in text.lower().split()})
     words = data.draw(st.lists(st.one_of(st.sampled_from(vocab), _FREE_WORDS), max_size=6))
     question = " ".join(words)
@@ -530,3 +543,74 @@ def test_retrieve_equals_a_brute_force_ranking(retrieval, data):
         ranked = sorted((-_fold_cosine(emb, vec), doc_id, ref, text) for doc_id, ref, text, emb in docs)
         expected = [(ref, text) for _, _, ref, text in ranked[:TOP_K]]
     assert qa.retrieve(question) == expected
+
+
+def _tied_session(spark) -> QASession:
+    """A fixture session whose corpus also holds, for two of its docs, a
+    copy with the tokens reversed: a different text and doc_id but the same
+    embedding, so every question scores the pair exactly alike."""
+    base = QASession.build(spark)
+    docs = base.corpus.orderBy("doc_id").limit(2).collect()
+    copies = [
+        (hashlib.sha256(text.encode()).hexdigest(), r.doc_type, r.ref, text)
+        for r in docs
+        for text in [" ".join(reversed(r.text.split()))]
+    ]
+    corpus = base.corpus.unionByName(spark.createDataFrame(copies, base.corpus.schema))
+    return QASession(
+        columns=base.columns,
+        edges=base.edges,
+        assets=base.assets,
+        corpus=corpus,
+        embedded=embed_documents(corpus).repartition(3),
+    )
+
+
+def test_index_ranks_as_retrieve_top_k_to_the_bit(spark):
+    qa = _tied_session(spark)
+    index = qa.index
+    n = len(index.ids)
+    by_id = {doc_id: i for i, doc_id in enumerate(index.ids)}
+    texts = [index.texts[by_id[doc_id]] for doc_id in sorted(by_id)]
+    questions = [texts[0], texts[1], " ".join(texts[:2]), _ASKS[0], _ASKS[2], "x"]
+
+    ties = 0
+    for question, k in itertools.product(questions, (1, TOP_K, n + 5)):
+        vec = hash_embed(question)
+        rows = retrieve_top_k(qa.embedded, vec, k=k).orderBy("rank").collect()
+        expected = [(r.doc_id, r.score.hex()) for r in rows]
+        got = [(index.ids[i], score.hex()) for i, score in index.search(vec, k)]
+        assert got == expected
+        assert len(got) == min(k, n)
+        ties += sum(a[1] == b[1] for a, b in zip(got, got[1:]))
+        hits = [(index.refs[by_id[doc_id]], index.texts[by_id[doc_id]]) for doc_id, _ in expected]
+        assert qa.retrieve(question, k) == hits
+    assert ties
+
+    # every doc's score for every doc's text as the question, against the
+    # sequential fold in pure Python: a reassociated or fused sum drifts here
+    embeddings = {r.doc_id: list(r.embedding) for r in qa.embedded.collect()}
+    for question in texts:
+        vec = hash_embed(question)
+        got = {index.ids[i]: score.hex() for i, score in index.search(vec, n)}
+        assert got == {doc_id: _fold_cosine(emb, vec).hex() for doc_id, emb in embeddings.items()}
+
+
+def test_index_over_the_doc_cap_fails_loudly(spark, monkeypatch):
+    qa = QASession.build(spark)
+    n_docs = qa.corpus.count()
+    monkeypatch.setattr(embed, "MAX_INDEX_DOCS", n_docs - 1)
+
+    with pytest.raises(RetrievalIndexTooLarge, match=f"reached {n_docs} docs"):
+        qa.retrieve(_ASKS[0])
+
+
+def test_a_zero_doc_vector_fails_the_index_build(spark):
+    docs = spark.createDataFrame(
+        [("a", "ra", "ta", [1.0] + [0.0] * (DIM - 1)), ("b", "rb", "tb", [0.0] * DIM)],
+        "doc_id string, ref string, text string, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="doc b has a zero-norm embedding"):
+        embed.FlatIndex.collect(docs)
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):  # no cosine in Spark either
+        retrieve_top_k(docs, hash_embed(_ASKS[0])).collect()

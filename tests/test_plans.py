@@ -132,6 +132,27 @@ def test_vocabulary_topk_avoids_full_sort(q):
     assert I.has_operator(df, "TakeOrderedAndProject")
 
 
+def test_operator_histogram_names_codegen_stage_nodes(spark):
+    # a plan with no exchange is not adaptive-wrapped, and every node carries
+    # its whole-stage-codegen stage id: `*(1) Project`, not an operator "1"
+    rdd_scan = spark.createDataFrame(spark.sparkContext.parallelize([(1,)]), "x long")
+    plain = rdd_scan.selectExpr("x * 2 AS y")
+    assert I.physical_plan(plain).startswith("*(1) ")
+    assert I.operator_histogram(plain) == {"Project": 1, "Scan": 1}
+    assert I.operators(plain) == ["Project", "Scan"]
+
+    wrapped = spark.range(8).selectExpr("id % 2 AS k").groupBy("k").count()
+    initial = I.operator_histogram(wrapped)
+    assert initial == {
+        "AdaptiveSparkPlan": 1, "Exchange": 1, "HashAggregate": 2, "Project": 1, "Range": 1,
+    }
+    wrapped.collect()  # the final plan renders codegen stage ids
+    final = I.operator_histogram(wrapped)
+    assert "*(" in I.physical_plan(wrapped)
+    assert not [name for name in final if name[0].isdigit()]
+    assert {"AdaptiveSparkPlan", "HashAggregate", "Range"} <= set(final)
+
+
 def test_topk_per_group_uses_window_group_limit(q):
     # rank<=k over a rank window must compile to WindowGroupLimit: each map
     # task pre-prunes to k rows per group before the window shuffle
