@@ -30,12 +30,12 @@ from pyspark.sql import functions as F
 
 from ..functions.cache import release_persisted, scoped_persist
 from ..functions.io import fan_out, load
+from ..functions.text import _SHINGLES_FROM_TOKS, _SQL_SHINGLES, SQL_TOKENS, TOKENS
 from ..registry import register
 from .decontam import _EVAL_MOD
-from .dedup import _SHINGLES_FROM_TOKS, _SQL_SHINGLES, _SQL_TOKENS
 from .sampling import _BUCKET_SPARK, _BUCKET_SQL
 from .search import _LM_SCORE_CTES
-from .text import _LANG_STOPWORDS, _TOKENS, _hits_sql, _hits_toks_expr
+from .text import _LANG_STOPWORDS, _hits_sql, _hits_toks_expr
 
 _MIN_QUALITY = 3
 _EN_RATE = 25
@@ -105,7 +105,7 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split once per row; the per-language filters and token counts all read
     # the materialized `toks` (higher-order fns get no cross-column CSE)
     sig = docs.selectExpr(
-        "doc_id", "lang", "n_chars", "text", f"{_TOKENS} AS toks"
+        "doc_id", "lang", "n_chars", "text", f"{TOKENS} AS toks"
     ).select(
         "doc_id",
         "lang",
@@ -252,8 +252,8 @@ _QSCORE_SQL = """
         {_hits_sql(_LANG_STOPWORDS['de'])} AS de_hits,
         {_hits_sql(_LANG_STOPWORDS['fr'])} AS fr_hits,
         {_hits_sql(_LANG_STOPWORDS['es'])} AS es_hits,
-        len({_SQL_TOKENS}) AS n_tokens,
-        len(list_distinct({_SQL_TOKENS})) AS n_unique,
+        len({SQL_TOKENS}) AS n_tokens,
+        len(list_distinct({SQL_TOKENS})) AS n_unique,
         length(regexp_replace(lower(text), '[a-z0-9\\s]', '', 'g')) AS n_punct,
         length(regexp_replace(text, '[^0-9]', '', 'g')) AS n_digit,
         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
@@ -269,7 +269,7 @@ _QSCORE_SQL = """
     sh AS (
       SELECT doc_id, unnest({_SQL_SHINGLES}) AS shingle
       FROM documents
-      WHERE len({_SQL_TOKENS}) >= 3
+      WHERE len({SQL_TOKENS}) >= 3
     ),
     contam AS (
       SELECT DISTINCT t.doc_id
@@ -329,7 +329,7 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load(spark, sf_dir, "documents"))
     en, de, fr, es = (F.col(f"{c}_hits") for c in ("en", "de", "fr", "es"))
     sig = docs.selectExpr(
-        "doc_id", "n_chars", "text", f"{_TOKENS} AS toks"
+        "doc_id", "n_chars", "text", f"{TOKENS} AS toks"
     ).select(
         "doc_id",
         "n_chars",
@@ -364,7 +364,7 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("q"),
     )
     sh = (
-        docs.selectExpr("doc_id", f"{_TOKENS} AS toks")
+        docs.selectExpr("doc_id", f"{TOKENS} AS toks")
         .filter("size(toks) >= 3")
         .selectExpr("doc_id", f"explode({_SHINGLES_FROM_TOKS}) AS shingle")
     )
@@ -436,8 +436,8 @@ _SPEARMAN_ORACLE = (
     + f"""
     , qsig AS (
       SELECT doc_id, n_chars,
-        len({_SQL_TOKENS}) AS n_tokens,
-        len(list_distinct({_SQL_TOKENS})) AS n_unique,
+        len({SQL_TOKENS}) AS n_tokens,
+        len(list_distinct({SQL_TOKENS})) AS n_unique,
         length(regexp_replace(lower(text), '[a-z0-9\\s]', '', 'g')) AS n_punct,
         length(regexp_replace(text, '[^0-9]', '', 'g')) AS n_digit
       FROM documents
@@ -485,7 +485,7 @@ def _quality_lm_joined(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .search import lm_bigram_doc_score  # noqa: PLC0415
 
     docs = fan_out(load(spark, sf_dir, "documents"))
-    qsig = docs.selectExpr("doc_id", "n_chars", "text", f"{_TOKENS} AS toks").select(
+    qsig = docs.selectExpr("doc_id", "n_chars", "text", f"{TOKENS} AS toks").select(
         "doc_id",
         "n_chars",
         F.expr("size(toks)").alias("n_tokens"),
@@ -744,8 +744,8 @@ def _domain_cap_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]
         "doc_id",
         "source",
         "n_chars",
-        "size(split(lower(text), '\\\\s+')) AS n_tokens",
-        "size(array_distinct(split(lower(text), '\\\\s+'))) AS n_unique",
+        f"size({TOKENS}) AS n_tokens",
+        f"size(array_distinct({TOKENS})) AS n_unique",
         "length(regexp_replace(lower(text), '[a-z0-9\\\\s]', '')) AS n_punct",
         "length(regexp_replace(text, '[^0-9]', '')) AS n_digit",
     ).selectExpr(

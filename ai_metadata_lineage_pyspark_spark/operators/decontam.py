@@ -25,8 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.io import fan_out, load
+from ..functions.text import _SHINGLES_FROM_TOKS, _SQL_SHINGLES, SQL_TOKENS, TOKENS
 from ..registry import register
-from .dedup import _SHINGLES_FROM_TOKS, _SQL_SHINGLES, _SQL_TOKENS, _TOKENS
 
 _EVAL_MOD = 50
 
@@ -37,7 +37,7 @@ _EVAL_MOD = 50
     WITH sh AS (
       SELECT doc_id, {_SQL_SHINGLES} AS shingles
       FROM documents
-      WHERE len({_SQL_TOKENS}) >= 3
+      WHERE len({SQL_TOKENS}) >= 3
     ),
     x AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     eval_sh AS (
@@ -68,7 +68,7 @@ def benchmark_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction of the doc's own shingle set."""
     docs = fan_out(load(spark, sf_dir, "documents"))
     sh = (
-        docs.selectExpr("doc_id", f"{_TOKENS} AS toks")
+        docs.selectExpr("doc_id", f"{TOKENS} AS toks")
         .filter("size(toks) >= 3")
         .selectExpr("doc_id", f"{_SHINGLES_FROM_TOKS} AS shingles")
     )
@@ -135,7 +135,7 @@ def _bloom_oracle(m: int) -> str:
     WITH sh AS (
       SELECT doc_id, {_SQL_SHINGLES} AS shingles
       FROM documents
-      WHERE len({_SQL_TOKENS}) >= 3
+      WHERE len({SQL_TOKENS}) >= 3
     ),
     x AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     eval_x AS (
@@ -222,7 +222,7 @@ def _bloom_decontam(spark: SparkSession, sf_dir: str, m: int) -> DataFrame:
     # positions, train side, per-doc totals); scoped-persist it so the
     # corpus is shingled once, not once per subtree
     sh = scoped_persist(
-        docs.selectExpr("doc_id", f"{_TOKENS} AS toks")
+        docs.selectExpr("doc_id", f"{TOKENS} AS toks")
         .filter("size(toks) >= 3")
         .selectExpr("doc_id", f"{_SHINGLES_FROM_TOKS} AS shingles")
     )
@@ -312,7 +312,7 @@ def _sweep_shingle_spark(n: int) -> str:
     "decontam_ngram_sweep",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_SQL_TOKENS} AS t FROM documents
+      SELECT doc_id, {SQL_TOKENS} AS t FROM documents
     ),
     sh AS (
       {" UNION ALL ".join(_sweep_shingle_sql(n) for n in _SWEEP_NS)}
@@ -367,7 +367,7 @@ def decontam_ngram_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-row dimension. Integer-exact throughout.
     """
     docs = fan_out(load(spark, sf_dir, "documents"))
-    toks = docs.selectExpr("doc_id", f"{_TOKENS} AS t")
+    toks = docs.selectExpr("doc_id", f"{TOKENS} AS t")
     sh = None
     for n in _SWEEP_NS:
         s = toks.filter(F.expr(f"size(t) >= {n}")).selectExpr(
@@ -438,7 +438,7 @@ _SWEEP_MS = (1024, 4096, 16384, 65536)
     WITH sh AS (
       SELECT doc_id, {_SQL_SHINGLES} AS shingles
       FROM documents
-      WHERE len({_SQL_TOKENS}) >= 3
+      WHERE len({SQL_TOKENS}) >= 3
     ),
     x AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     eval_sh AS (
@@ -524,7 +524,7 @@ def bloom_m_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = fan_out(load(spark, sf_dir, "documents"))
     x = (
-        docs.selectExpr("doc_id", f"{_TOKENS} AS toks")
+        docs.selectExpr("doc_id", f"{TOKENS} AS toks")
         .filter("size(toks) >= 3")
         .selectExpr("doc_id", f"explode({_SHINGLES_FROM_TOKS}) AS shingle")
     )

@@ -25,30 +25,10 @@ from pyspark.sql import functions as F
 
 from ..functions.cache import memo_get, memo_put, release_persisted, scoped_persist
 from ..functions.io import fan_out, load
+from ..functions.text import _SHINGLES_FROM_TOKS, _SQL_SHINGLES, SQL_TOKENS, TOKENS
 from ..functions.vectors import cosine_from_norms_unrolled_expr, norm_expr
 from ..registry import register
 from ..session import iter_checkpoint
-
-# ---------------------------------------------------------------------------
-# Shared shingling expressions (Spark SQL expr strings / DuckDB SQL).
-# Spark array indexing `t[i]` is 0-based; DuckDB list indexing is 1-based.
-# ---------------------------------------------------------------------------
-
-_TOKENS = "split(lower(text), '\\\\s+')"
-# Over a pre-materialized `toks` column, NOT the raw split expression: the
-# three array indexes inside the lambda would each re-evaluate the split per
-# shingle (Catalyst inlines the substituted tree into the lambda body), which
-# measured ~2x slower than splitting once in a prior projection.
-_SHINGLES_FROM_TOKS = (
-    "array_distinct(transform(sequence(0, size(toks) - 3),"
-    " i -> concat_ws(' ', toks[i], toks[i + 1], toks[i + 2])))"
-)
-
-_SQL_TOKENS = "regexp_split_to_array(lower(text), '\\s+')"
-_SQL_SHINGLES = (
-    "list_distinct(list_transform(range(len({t}) - 2),"
-    " i -> {t}[i + 1] || ' ' || {t}[i + 2] || ' ' || {t}[i + 3]))"
-).format(t=_SQL_TOKENS)
 
 _N_SIGS = 8
 
@@ -114,8 +94,7 @@ def _sig_exprs_sql() -> str:
 )
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load(spark, sf_dir, "documents"))
-    norm_hash = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
-    return docs.groupBy(norm_hash.alias("text_hash")).agg(
+    return docs.groupBy(F.expr(_NORM_HASH_SPARK).alias("text_hash")).agg(
         F.min("doc_id").alias("canonical_doc_id"),
         F.count(F.lit(1)).alias("n_copies"),
         F.min("n_chars").alias("n_chars"),
@@ -136,7 +115,7 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH sh AS (
       SELECT doc_id, {_SQL_SHINGLES} AS shingles
       FROM documents
-      WHERE len({_SQL_TOKENS}) >= 3
+      WHERE len({SQL_TOKENS}) >= 3
     ),
     hp AS (
       SELECT doc_id, len(shingles) AS n_shingles, {_HASH_PAIRS_SQL} AS hp
@@ -150,7 +129,7 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load(spark, sf_dir, "documents"))
     return (
-        docs.selectExpr("doc_id", f"{_TOKENS} AS toks")
+        docs.selectExpr("doc_id", f"{TOKENS} AS toks")
         .filter("size(toks) >= 3")
         .selectExpr("doc_id", f"{_SHINGLES_FROM_TOKS} AS shingles")
         .selectExpr(
@@ -177,7 +156,7 @@ _PAIRS_SQL_CTES = f"""
     sh AS MATERIALIZED (
       SELECT doc_id, {_SQL_SHINGLES} AS shingles
       FROM documents
-      WHERE len({_SQL_TOKENS}) >= 3
+      WHERE len({SQL_TOKENS}) >= 3
     ),
     hp AS MATERIALIZED (
       SELECT doc_id, shingles, {_HASH_PAIRS_SQL} AS hp FROM sh
@@ -255,7 +234,7 @@ def _shingle_buckets(spark: SparkSession, sf_dir: str):
     """
     docs = fan_out(load(spark, sf_dir, "documents"))
     sh = scoped_persist(
-        docs.selectExpr("doc_id", f"{_TOKENS} AS toks")
+        docs.selectExpr("doc_id", f"{TOKENS} AS toks")
         .filter("size(toks) >= 3")
         .selectExpr("doc_id", f"{_SHINGLES_FROM_TOKS} AS shingles")
     )
@@ -384,7 +363,7 @@ _TOKEN_BITS = (
     " div shiftleft(1, 3 - k % 4) % 2) - 1)"
 )
 _SIMHASH_SUMS = (
-    f"aggregate({_TOKENS}, array_repeat(cast(0 as bigint), 32),"
+    f"aggregate({TOKENS}, array_repeat(cast(0 as bigint), 32),"
     f" (acc, t) -> zip_with(acc, {_TOKEN_BITS}, (x, y) -> x + y))"
 )
 
@@ -435,21 +414,21 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     r9 HOF-audit verdict (ARTIFACTS/r09_hof_lambda_audit.md): the fold IS
     interpreted (HOF lambda), but its per-element cost — one md5 plus
     integer bit arithmetic per token — is small enough that the measured
-    A/B put the Arrow-batched vectorized twin SLOWER at this corpus shape
-    (0.36s fold vs 0.55s mapInPandas at sf0.1: Arrow text serialization +
-    Python worker round-trip exceeds the interpretation tax). The
-    vectorized twin (`_simhash_fp_pandas` — integer +-1 sums are
-    order-free, so it is bit-exact and hash-safe, with one md5 per
-    DISTINCT token per batch) stays shipped and equality-pinned for the
-    corpus shapes where per-doc token mass is large enough to flip the
-    tradeoff; the gate's Bloom probe (3 positions x substr per shingle)
-    was ~10x the per-element cost and DID flip it — that is the audit's
-    dividing line."""
+    A/B put an Arrow-batched mapInPandas twin SLOWER at this corpus shape
+    (0.36s fold vs 0.55s at sf0.1: Arrow text serialization + Python
+    worker round-trip exceeds the interpretation tax); the gate's Bloom
+    probe (3 positions x substr per shingle) was ~10x the per-element cost
+    and DID flip it — that is the audit's dividing line. The twin is
+    deleted: no query called it, and its Python `\\s+` split also broke
+    on Unicode spaces that Spark's tokenizer keeps inside a token
+    (functions/text.py), so it was not the equal it was pinned as. The
+    folds are checked against a pure-Python reference with Java's
+    whitespace set instead (tests/test_operators_unit.py)."""
     return _simhash_expr(fan_out(load(spark, sf_dir, "documents")))
 
 
 def _simhash_expr(docs: DataFrame) -> DataFrame:
-    """Expression-fold 32-bit fingerprint (the default; see simhash)."""
+    """Expression-fold 32-bit fingerprint (doc_id, simhash_int, simhash_hex)."""
     return docs.selectExpr(
         "doc_id",
         f"{_SIMHASH_SUMS} AS bit_sums",
@@ -465,87 +444,6 @@ def _simhash_expr(docs: DataFrame) -> DataFrame:
         " + if(bit_sums[j * 4 + 2] > 0, 2, 0) + if(bit_sums[j * 4 + 3] > 0, 1, 0)),"
         " '', (acc, d) -> concat(acc, substr('0123456789abcdef', d + 1, 1))) AS simhash_hex",
     )
-
-
-def _simhash_fp_pandas(docs: DataFrame, n_bits: int) -> DataFrame:
-    """Vectorized SimHash fingerprints over an Arrow-batched mapInPandas.
-
-    Tokenization replicates Spark's split(lower(text), '\\\\s+') exactly
-    (re.split keeps leading/trailing empty strings just like Java
-    split(regex, -1) and DuckDB regexp_split_to_array — the empty token
-    contributes its own md5 weight in all three engines). Each batch
-    computes one +-1 weight row per DISTINCT token (md5 -> unpackbits),
-    accumulates integer bit sums per doc, and packs sign bits. 32-bit
-    output: (doc_id, simhash_int, simhash_hex); 64-bit: (doc_id, hi, lo)
-    — the two unsigned halves simhash64_hamming_pairs blocks on.
-    """
-    n_bytes = n_bits // 8
-
-    def probe(batches):
-        import hashlib
-        import re
-
-        import numpy as np
-        import pandas as pd
-
-        ws = re.compile(r"\s+")
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            tok_lists = [ws.split(t.lower()) for t in pdf["text"]]
-            vocab: dict[str, int] = {}
-            for toks in tok_lists:
-                for t in toks:
-                    if t not in vocab:
-                        vocab[t] = len(vocab)
-            weights = np.empty((len(vocab), n_bits), dtype=np.int64)
-            for t, i in vocab.items():
-                d = hashlib.md5(t.encode("utf-8")).digest()[:n_bytes]
-                bits = np.unpackbits(np.frombuffer(d, dtype=np.uint8))
-                weights[i] = 2 * bits.astype(np.int64) - 1
-            out_bits = np.empty((len(pdf), n_bits), dtype=np.uint8)
-            for row, toks in enumerate(tok_lists):
-                idx = np.fromiter(
-                    (vocab[t] for t in toks), dtype=np.int64, count=len(toks)
-                )
-                sums = weights[idx].sum(axis=0)
-                out_bits[row] = (sums > 0).astype(np.uint8)
-            packed = np.packbits(out_bits, axis=1)
-            if n_bits == 32:
-                ints = [
-                    int.from_bytes(packed[r].tobytes(), "big")
-                    for r in range(len(pdf))
-                ]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"].to_numpy(),
-                        "simhash_int": np.array(ints, dtype=np.int64),
-                        "simhash_hex": [f"{v:08x}" for v in ints],
-                    }
-                )
-            else:
-                his = [
-                    int.from_bytes(packed[r, :4].tobytes(), "big")
-                    for r in range(len(pdf))
-                ]
-                los = [
-                    int.from_bytes(packed[r, 4:8].tobytes(), "big")
-                    for r in range(len(pdf))
-                ]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"].to_numpy(),
-                        "hi": np.array(his, dtype=np.int64),
-                        "lo": np.array(los, dtype=np.int64),
-                    }
-                )
-
-    schema = (
-        "doc_id bigint, simhash_int bigint, simhash_hex string"
-        if n_bits == 32
-        else "doc_id bigint, hi bigint, lo bigint"
-    )
-    return docs.select("doc_id", "text").mapInPandas(probe, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1682,7 +1580,7 @@ def chunk_dedup_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = fan_out(load(spark, sf_dir, "documents"))
     chunks = (
-        docs.selectExpr("doc_id", f"{_TOKENS} AS t")
+        docs.selectExpr("doc_id", f"{TOKENS} AS t")
         .selectExpr(
             "doc_id", f"explode(sequence(0, (size(t) - 1) div {_CDR_B})) AS blk", "t"
         )
@@ -1767,7 +1665,6 @@ def source_priority_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     'src' || priority rebuild).
     """
     docs = fan_out(load(spark, sf_dir, "documents"))
-    norm_hash = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
     packed = F.expr(f"CAST(substr(source, 4) AS BIGINT) * {_PRIO_PACK} + doc_id")
     packed_src = F.expr(
         "concat(lpad(CAST(CAST(substr(source, 4) AS BIGINT) AS STRING), 13, '0'),"
@@ -1775,7 +1672,7 @@ def source_priority_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         docs.select(
-            norm_hash.alias("text_hash"),
+            F.expr(_NORM_HASH_SPARK).alias("text_hash"),
             "source",
             packed.alias("packed"),
             packed_src.alias("packed_src"),
@@ -1848,7 +1745,7 @@ def _sweep_case(field_idx: int) -> str:
     WITH sh AS (
       SELECT doc_id, {_SQL_SHINGLES} AS shingles
       FROM documents
-      WHERE len({_SQL_TOKENS}) >= 3
+      WHERE len({SQL_TOKENS}) >= 3
     ),
     hp AS (
       SELECT doc_id, shingles, {_HASH_PAIRS_SQL} AS hp FROM sh
@@ -1921,7 +1818,7 @@ def minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     release_persisted()  # drop any prior invocation's cached intermediates
     docs = fan_out(load(spark, sf_dir, "documents"))
     sh = scoped_persist(
-        docs.selectExpr("doc_id", f"{_TOKENS} AS toks")
+        docs.selectExpr("doc_id", f"{TOKENS} AS toks")
         .filter("size(toks) >= 3")
         .selectExpr("doc_id", f"{_SHINGLES_FROM_TOKS} AS shingles")
     )
@@ -2219,7 +2116,7 @@ _TOKEN_BITS64 = (
     " div shiftleft(1, 3 - k % 4) % 2) - 1)"
 )
 _SIMHASH64_SUMS = (
-    f"aggregate({_TOKENS}, array_repeat(cast(0 as bigint), 64),"
+    f"aggregate({TOKENS}, array_repeat(cast(0 as bigint), 64),"
     f" (acc, t) -> zip_with(acc, {_TOKEN_BITS64}, (x, y) -> x + y))"
 )
 
@@ -2327,25 +2224,25 @@ def simhash64_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _simhash64_fp(docs: DataFrame) -> DataFrame:
+    """Expression-fold 64-bit fingerprint (doc_id, hi, lo): the two
+    unsigned 32-bit halves simhash64_hamming_pairs blocks on."""
+    return docs.selectExpr("doc_id", f"{_SIMHASH64_SUMS} AS bs").selectExpr(
+        "doc_id",
+        "aggregate(zip_with(slice(bs, 1, 32), sequence(0, 31),"
+        " (s, k) -> if(s > 0, shiftleft(cast(1 as bigint), 31 - k),"
+        " cast(0 as bigint))), cast(0 as bigint), (a, v) -> a + v) AS hi",
+        "aggregate(zip_with(slice(bs, 33, 32), sequence(32, 63),"
+        " (s, k) -> if(s > 0, shiftleft(cast(1 as bigint), 63 - k),"
+        " cast(0 as bigint))), cast(0 as bigint), (a, v) -> a + v) AS lo",
+    )
+
+
 def _simhash64_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Fingerprint/bucket/candidate stages of simhash64_hamming_pairs,
     exposed separately so the skew probe (tools/simhash_skew_probe.py) can
     measure bucket occupancy and candidate volume stage-by-stage."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
-    # expression-fold fingerprint (the audit-measured default — see
-    # simhash's docstring); _simhash_fp_pandas(docs, 64) is the pinned-
-    # equal vectorized alternative for heavier per-doc token mass
-    fp = scoped_persist(
-        docs.selectExpr("doc_id", f"{_SIMHASH64_SUMS} AS bs").selectExpr(
-            "doc_id",
-            "aggregate(zip_with(slice(bs, 1, 32), sequence(0, 31),"
-            " (s, k) -> if(s > 0, shiftleft(cast(1 as bigint), 31 - k),"
-            " cast(0 as bigint))), cast(0 as bigint), (a, v) -> a + v) AS hi",
-            "aggregate(zip_with(slice(bs, 33, 32), sequence(32, 63),"
-            " (s, k) -> if(s > 0, shiftleft(cast(1 as bigint), 63 - k),"
-            " cast(0 as bigint))), cast(0 as bigint), (a, v) -> a + v) AS lo",
-        )
-    )
+    fp = scoped_persist(_simhash64_fp(fan_out(load(spark, sf_dir, "documents"))))
     blk_exprs = ", ".join(
         f"struct({j} AS blk, {expr} AS blk_val)"
         for j, expr in enumerate(

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.io import fan_out, load
+from ..functions.text import SQL_TOKENS, TOKENS
 from ..registry import register
 
 # hashed-feature linear model: weight(token) = md5-bucket in [-1000, 1000].
@@ -34,9 +35,6 @@ from ..registry import register
 # (dedup.py MinHash, sampling.py strata gates).
 _W_SPARK = "cast(conv(substr(md5(t), 1, 8), 16, 10) as bigint) % 2001 - 1000"
 _W_SQL = "('0x' || substr(md5(t), 1, 8))::BIGINT % 2001 - 1000"
-
-_TOKS_SPARK = "split(lower(text), '\\\\s+')"
-_TOKS_SQL = "regexp_split_to_array(lower(text), '\\s+')"
 
 _WIN = 8  # intra-doc dedup window width (tokens)
 
@@ -52,11 +50,11 @@ _DENY_RE = "\\b(customer|vector)\\b"
     "quality_classifier_score",
     oracle=f"""
     SELECT doc_id,
-      len({_TOKS_SQL}) AS n_tokens,
-      CAST(list_sum(list_transform({_TOKS_SQL}, t -> {_W_SQL})) AS BIGINT)
+      len({SQL_TOKENS}) AS n_tokens,
+      CAST(list_sum(list_transform({SQL_TOKENS}, t -> {_W_SQL})) AS BIGINT)
         AS weight_sum,
-      CAST(list_sum(list_transform({_TOKS_SQL}, t -> {_W_SQL})) AS DOUBLE)
-        / len({_TOKS_SQL}) AS score
+      CAST(list_sum(list_transform({SQL_TOKENS}, t -> {_W_SQL})) AS DOUBLE)
+        / len({SQL_TOKENS}) AS score
     FROM documents
     """,
 )
@@ -76,7 +74,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"aggregate(transform(toks, t -> {_W_SPARK}), 0L, (acc, x) -> acc + x)"
     )
     return (
-        docs.select("doc_id", F.expr(_TOKS_SPARK).alias("toks"))
+        docs.select("doc_id", F.expr(TOKENS).alias("toks"))
         .select(
             "doc_id",
             F.size("toks").alias("n_tokens"),
@@ -93,10 +91,10 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH w AS (
       SELECT doc_id,
-        CASE WHEN len({_TOKS_SQL}) >= {_WIN}
+        CASE WHEN len({SQL_TOKENS}) >= {_WIN}
           THEN list_transform(
-            generate_series(1, len({_TOKS_SQL}) - {_WIN - 1}),
-            i -> array_to_string({_TOKS_SQL}[i:i + {_WIN - 1}], ' '))
+            generate_series(1, len({SQL_TOKENS}) - {_WIN - 1}),
+            i -> array_to_string({SQL_TOKENS}[i:i + {_WIN - 1}], ' '))
           ELSE [] END AS wins
       FROM documents
     )
@@ -131,7 +129,7 @@ def intradoc_window_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" ELSE array() END"
     )
     return (
-        docs.select("doc_id", F.expr(_TOKS_SPARK).alias("toks"))
+        docs.select("doc_id", F.expr(TOKENS).alias("toks"))
         .select("doc_id", wins.alias("wins"))
         .select(
             "doc_id",
@@ -207,7 +205,7 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH per_lang AS (
       SELECT lang,
         COUNT(*) AS n_docs,
-        CAST(SUM(len({_TOKS_SQL})) AS BIGINT) AS n_tokens
+        CAST(SUM(len({SQL_TOKENS})) AS BIGINT) AS n_tokens
       FROM documents
       GROUP BY lang
     ),
@@ -239,7 +237,7 @@ def lang_mix_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load(spark, sf_dir, "documents"))
     per_lang = docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(F.expr(_TOKS_SPARK))).alias("n_tokens"),
+        F.sum(F.size(F.expr(TOKENS))).alias("n_tokens"),
     )
     weighted = per_lang.withColumn(
         "w_micro",
@@ -265,8 +263,8 @@ def lang_mix_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # whether surface stats separate the dominant language.
 _PCT_FEATS_SPARK = (
     "n_chars DIV 100",
-    "size(array_distinct(split(lower(text), '\\\\s+')))",
-    "size(split(lower(text), '\\\\s+'))",
+    f"size(array_distinct({TOKENS}))",
+    f"size({TOKENS})",
     "1",
 )
 _PCT_FEATS_SQL = (

@@ -21,8 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.io import fan_out, load
+from ..functions.text import TOKENS
 from ..registry import register
-from .text import _TOKENS
 
 _TOP_K_TOKENS = 50
 
@@ -48,7 +48,7 @@ def corpus_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic total order (count DESC, token ASC) so the top-k boundary
     is stable across engines and partitionings."""
     docs = fan_out(load(spark, sf_dir, "documents"))
-    x = docs.selectExpr("doc_id", f"explode({_TOKENS}) AS token")
+    x = docs.selectExpr("doc_id", f"explode({TOKENS}) AS token")
     return (
         x.groupBy("token")
         .agg(

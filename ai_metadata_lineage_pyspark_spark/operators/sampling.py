@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.io import load
+from ..functions.text import TOKENS
 from ..registry import register
 
 # md5-derived bucket in [0, 100): identical expression in both engines.
@@ -128,7 +129,7 @@ def shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         F.expr(f"doc_id div {_PACK_BLOCK}").alias("block"),
-        F.expr("size(split(lower(text), '\\\\s+'))").alias("n_tokens"),
+        F.expr(f"size({TOKENS})").alias("n_tokens"),
     )
     w = (
         Window.partitionBy("lang", "block")
@@ -411,8 +412,7 @@ def token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("lang").alias("domain"))
         .agg(
             F.expr(
-                "CAST(SUM(size(filter(split(lower(text), '\\\\s+'),"
-                " x -> x <> ''))) AS BIGINT)"
+                f"CAST(SUM(size(filter({TOKENS}, x -> x <> ''))) AS BIGINT)"
             ).alias("n_tok")
         )
     )

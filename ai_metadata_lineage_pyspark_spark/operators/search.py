@@ -6,8 +6,10 @@ embedding KNN over corpus docs, qa/embed_index.py:23-46) with the lexical
 half every retrieval stack pairs with vectors: a postings index for keyword
 lookup and a TF-IDF ranking for sparse relevance.
 
-Tokenization matches the shared text-operator convention (lower +
-whitespace split — operators/text.py).
+Tokenization is the corpus tokenizer (lower + whitespace split) from
+functions/text.py, and the four term-weighting rankers (tfidf_top_terms,
+lexical_search_topk, sparse_cosine_doc_pairs, bm25_search_topk) read one
+(doc_id, token, tf) table built there (`term_counts`).
 
 Scale notes: the index build is explode -> groupBy(token) — one shuffle
 keyed by token with map-side partial aggregation; postings lists are
@@ -30,7 +32,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.cache import (
+    model_memo_get,
+    model_memo_put,
+    release_persisted,
+    scoped_persist,
+)
 from ..functions.io import fan_out, load
+from ..functions.text import TOKENS, term_counts
 from ..registry import register
 
 # minimum document frequency for a token to enter the index (drops hapax
@@ -68,7 +77,7 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
         docs.select(
             "doc_id",
-            F.explode(F.split(F.lower("text"), r"\s+")).alias("token"),
+            F.explode(F.expr(TOKENS)).alias("token"),
         )
         .filter(F.col("token") != "")
         .distinct()
@@ -122,23 +131,8 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scan); df is vocabulary-sized and BROADCASTS back onto tf; the
     top-k window partitions by doc_id, which is the same key tf is already
     hashed on."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
-    tf = (
-        docs.select(
-            "doc_id",
-            F.explode(F.split(F.lower("text"), r"\s+")).alias("token"),
-        )
-        .filter(F.col("token") != "")
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    from ..functions.cache import release_persisted, scoped_persist  # noqa: PLC0415
-
-    # tf feeds both the df build and the score probe; column pruning makes
-    # the two subtrees non-identical so exchange reuse never fires, and each
-    # re-ran the corpus explode+agg (r14, same fix as the lexical rankers)
     release_persisted()  # drop any prior invocation's cached intermediates
-    tf = scoped_persist(tf)
+    tf = term_counts(fan_out(load(spark, sf_dir, "documents")))
     df = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     scored = tf.join(F.broadcast(df), "token").withColumn(
         "score_fp",
@@ -218,11 +212,7 @@ def bigram_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-occurrence), unigram counts broadcast back into the bigram table,
     total via 1-row broadcast; one explode-shuffle each for the two count
     aggregates."""
-    from ..functions.cache import release_persisted, scoped_persist  # noqa: PLC0415
-
-    toks = fan_out(load(spark, sf_dir, "documents")).select(
-        F.expr("split(lower(text), '\\\\s+')").alias("t")
-    )
+    toks = fan_out(load(spark, sf_dir, "documents")).select(F.expr(TOKENS).alias("t"))
     uni = (
         toks.select(F.explode("t").alias("token"))
         .groupBy("token")
@@ -290,6 +280,10 @@ def bigram_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LM_UNUSUAL_THRESHOLD = 5  # avg corpus bigram count below this -> flagged
 
+# adjacent-token bigrams of a `t` token column; callers keep size(t) >= 2
+# (on a 1-token doc Spark's sequence(1, 0) is [1, 0], a bogus pair)
+_ADJ_BIGRAMS = "transform(sequence(1, size(t) - 1), i -> concat(t[i-1], ' ', t[i]))"
+
 # Shared CTE block ending in `lm_scores` (doc_id, n_bigrams,
 # avg_bigram_count, is_unusual) — reused by curation.py's lm_quality_buckets
 # so the bucket oracle scores docs with EXACTLY this SQL.
@@ -351,20 +345,10 @@ def lm_bigram_doc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     average. At 100 TB both join sides partition by bigram and stop-bigram
     skew is AQE-handled (bounded by the same vocabulary skew the inverted
     index documents)."""
-    from ..functions.cache import release_persisted, scoped_persist  # noqa: PLC0415
-
     release_persisted()  # drop any prior invocation's cached intermediates
-    toks = fan_out(load(spark, sf_dir, "documents")).select(
-        "doc_id", F.expr("split(lower(text), '\\\\s+')").alias("t")
-    )
-    doc_bi = (
-        toks.filter(F.size("t") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr("transform(sequence(1, size(t) - 1), i -> concat(t[i-1], ' ', t[i]))")
-            ).alias("bigram"),
-        )
+    toks = fan_out(load(spark, sf_dir, "documents")).select("doc_id", F.expr(TOKENS).alias("t"))
+    doc_bi = toks.filter(F.size("t") >= 2).select(
+        "doc_id", F.explode(F.expr(_ADJ_BIGRAMS)).alias("bigram")
     )
     per_doc = scoped_persist(
         doc_bi.groupBy("doc_id", "bigram").agg(F.count(F.lit(1)).alias("k"))
@@ -429,7 +413,7 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-weighted top-k."""
     words = (
         fan_out(load(spark, sf_dir, "documents"))
-        .select(F.explode(F.expr("split(lower(text), '\\\\s+')")).alias("word"))
+        .select(F.explode(F.expr(TOKENS)).alias("word"))
         .where("word <> '' AND length(word) >= 2")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n_word"))
@@ -464,6 +448,16 @@ _SEARCH_TOP_K = 5
 
 def _search_query_values_sql() -> str:
     return ", ".join(f"({i}, '{q}')" for i, q in enumerate(_SEARCH_QUERIES))
+
+
+def _query_terms(spark: SparkSession) -> DataFrame:
+    """(query_id, token): the fixed query set split on whitespace."""
+    return (
+        spark.createDataFrame(
+            [(i, q) for i, q in enumerate(_SEARCH_QUERIES)], "query_id INT, qtext STRING"
+        )
+        .select("query_id", F.explode(F.expr("split(qtext, '\\\\s+')")).alias("token"))
+    )
 
 
 @register(
@@ -516,27 +510,12 @@ def lexical_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast into the postings join, so serving Q queries costs one
     token-keyed probe of the postings — never a corpus scan per query.
     WindowGroupLimit prunes to top-k per query before the final sort."""
-    from ..functions.cache import release_persisted, scoped_persist  # noqa: PLC0415
-
-    queries = spark.createDataFrame(
-        [(i, q) for i, q in enumerate(_SEARCH_QUERIES)], "query_id INT, qtext STRING"
-    )
-    qterms = queries.select(
-        "query_id", F.explode(F.expr("split(qtext, '\\\\s+')")).alias("token")
-    )
-    # the postings table feeds BOTH the score probe and the df build; without
-    # a persist each consumer re-runs the corpus tokenize+explode+agg
-    # (column pruning makes the two subtrees non-identical, so ReuseExchange
-    # can never fold them — r14 measurement: ~2x the query's CPU in
-    # duplicated postings builds)
+    # the postings table feeds BOTH the score probe and the df build (r14
+    # measurement before its persist: ~2x the query's CPU in duplicated
+    # postings builds)
     release_persisted()  # drop any prior invocation's cached intermediates
-    tok = scoped_persist(
-        fan_out(load(spark, sf_dir, "documents"))
-        .select("doc_id", F.explode(F.expr("split(lower(text), '\\\\s+')")).alias("token"))
-        .where("token <> ''")
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    qterms = _query_terms(spark)
+    tok = term_counts(fan_out(load(spark, sf_dir, "documents")))
     df = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     scored = (
         F.broadcast(qterms)
@@ -683,13 +662,10 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     two top-k lists — |panel|·k rows, trivially broadcastable. At the
     registered SFs the panel covers every query id, so results are
     unchanged from the pre-panel registration."""
-    from ..functions.cache import release_persisted, scoped_persist  # noqa: PLC0415
     from .similarity import _PANEL_CAP, _QUERY_MOD, cosine_topk_panel
 
     docs = fan_out(load(spark, sf_dir, "documents"))
-    toks = docs.select(
-        "doc_id", F.expr("split(lower(text), '\\\\s+')").alias("t")
-    )
+    toks = docs.select("doc_id", F.expr(TOKENS).alias("t"))
     # the bigram postings feed three consumers (df build, query-feature
     # selection, score probe); column pruning makes the subtrees
     # non-identical so ReuseExchange never folds them, and each re-ran the
@@ -698,15 +674,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     release_persisted()  # drop any prior invocation's cached intermediates
     bif = scoped_persist(
         toks.filter(F.size("t") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(t) - 1),"
-                    " i -> concat(t[i-1], ' ', t[i]))"
-                )
-            ).alias("bigram"),
-        )
+        .select("doc_id", F.explode(F.expr(_ADJ_BIGRAMS)).alias("bigram"))
         .groupBy("doc_id", "bigram")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -849,7 +817,7 @@ def _bpe_words(docs: DataFrame, *keys: str) -> DataFrame:
     delimiter, see `_bpe_train_ctes`) out of every token, and makes token
     strings pure ASCII, so Python's string order is Spark's binary order."""
     return (
-        docs.select(*keys, F.explode(F.expr("split(lower(text), '\\\\s+')")).alias("word"))
+        docs.select(*keys, F.explode(F.expr(TOKENS)).alias("word"))
         .where("word rlike '^[a-z]+$' AND length(word) >= 2")
         .groupBy(*keys, "word")
         .agg(F.count(F.lit(1)).alias("n_word"))
@@ -1045,8 +1013,6 @@ def _fitted_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     is reused until `release_models()` — the fitted-tokenizer shape a
     production encode job uses — and `release_persisted()` leaves it, and
     every other query's memo, alone."""
-    from ..functions.cache import model_memo_get, model_memo_put  # noqa: PLC0415
-
     key = ("bpe_merges", spark.sparkContext.applicationId, sf_dir)
     cached = model_memo_get(key)
     if cached is None:
@@ -1418,26 +1384,13 @@ def sparse_cosine_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by token whose per-key fan-out is bounded by the posting cap; the
     pair aggregation and the two norm joins are keyed by doc ids. No stage
     touches doc x doc."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
-    tf = (
-        docs.select(
-            "doc_id",
-            F.explode(F.split(F.lower("text"), r"\s+")).alias("token"),
-        )
-        .filter(F.col("token") != "")
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    from ..functions.cache import release_persisted, scoped_persist  # noqa: PLC0415
-
-    # tf feeds the df build and the weighting probe; wt feeds the signature-
-    # df build and the capped-signature probe (which itself fans into the
-    # norm pass and both self-join sides). Without the two persists every
-    # consumer re-ran its whole upstream (tf: corpus explode+agg; wt: tf +
-    # broadcast join + top-R window) — r14: the deepest duplicated-subtree
-    # stack in the lexical family.
+    # wt feeds the signature-df build and the capped-signature probe (which
+    # itself fans into the norm pass and both self-join sides). Without its
+    # persist (and term_counts') every consumer re-ran its whole upstream
+    # (tf: corpus explode+agg; wt: tf + broadcast join + top-R window) —
+    # r14: the deepest duplicated-subtree stack in the lexical family.
     release_persisted()  # drop any prior invocation's cached intermediates
-    tf = scoped_persist(tf)
+    tf = term_counts(fan_out(load(spark, sf_dir, "documents")))
     df = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     wt0 = (
         tf.join(F.broadcast(df.filter(F.col("df") >= 2)), "token")
@@ -1546,11 +1499,10 @@ def ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = docs.select(
         "doc_id",
         F.expr(
-            "CASE WHEN size(split(lower(text), '\\\\s+')) >= 2 THEN"
+            f"CASE WHEN size({TOKENS}) >= 2 THEN"
             " array_distinct(transform("
-            "  sequence(1, size(split(lower(text), '\\\\s+')) - 1),"
-            "  i -> concat(split(lower(text), '\\\\s+')[i - 1], ' ',"
-            "              split(lower(text), '\\\\s+')[i])))"
+            f"  sequence(1, size({TOKENS}) - 1),"
+            f"  i -> concat({TOKENS}[i - 1], ' ', {TOKENS}[i])))"
             " ELSE array() END"
         ).alias("bis"),
     )
@@ -1655,25 +1607,11 @@ def bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats are ONE broadcast row; query terms broadcast into the postings
     probe, so Q queries cost one token-keyed probe. WindowGroupLimit
     prunes per-query candidates before the final sort."""
-    from ..functions.cache import release_persisted, scoped_persist  # noqa: PLC0415
-
-    queries = spark.createDataFrame(
-        [(i, q) for i, q in enumerate(_SEARCH_QUERIES)], "query_id INT, qtext STRING"
-    )
-    qterms = queries.select(
-        "query_id", F.explode(F.expr("split(qtext, '\\\\s+')")).alias("token")
-    )
     # four consumers (probe, dl, corpus stats, df) each re-ran the corpus
-    # tokenize+explode+agg before this persist — column pruning makes the
-    # subtrees non-identical so ReuseExchange never folds them (r14)
+    # tokenize+explode+agg before the term_counts persist (r14)
     release_persisted()  # drop any prior invocation's cached intermediates
-    tok = scoped_persist(
-        fan_out(load(spark, sf_dir, "documents"))
-        .select("doc_id", F.explode(F.expr("split(lower(text), '\\\\s+')")).alias("token"))
-        .where("token <> ''")
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    qterms = _query_terms(spark)
+    tok = term_counts(fan_out(load(spark, sf_dir, "documents")))
     dl = tok.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cache import scoped_persist
 from ..functions.io import load
+from ..functions.text import SQL_TOKENS, TOKENS
 from ..registry import register
 
 _K = 64
@@ -87,8 +88,6 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CMS_D = 4  # hash rows
 _CMS_W = 256  # buckets per row
 
-_CMS_TOKS_SQL = "regexp_split_to_array(lower(text), '\\s+')"
-
 _BUCKET_SPARK = (
     "pmod(cast(conv(substr(md5(concat(cast(j as string), '|', token)), 1, 8),"
     " 16, 10) as bigint), {w})"
@@ -103,7 +102,7 @@ _BUCKET_SQL = (
     "cms_heavy_hitters",
     oracle=f"""
     WITH toks AS (
-      SELECT unnest({_CMS_TOKS_SQL}) AS token FROM documents
+      SELECT unnest({SQL_TOKENS}) AS token FROM documents
     ),
     cells AS (
       SELECT j, {_BUCKET_SQL.format(w=_CMS_W)} AS bucket,
@@ -144,9 +143,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     that makes CMS the right tool for distributed heavy-hitter counting).
     The probe side is 20 rows; the cells table broadcasts."""
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(F.expr("split(lower(text), '\\\\s+')")).alias("token")
-    )
+    toks = docs.select(F.explode(F.expr(TOKENS)).alias("token"))
     js = F.array(*[F.lit(j) for j in range(_CMS_D)])
     cells = (
         toks.select("token", F.explode(js).alias("j"))

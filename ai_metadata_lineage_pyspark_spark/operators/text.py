@@ -11,8 +11,10 @@ parallel, whole-stage codegen. At 100 TB these run at scan speed with
 column pruning (only `doc_id`/`text` are read).
 
 Determinism contract: all ratios are int/int double divisions (exact IEEE,
-identical across engines); token arrays use the same `\\s+` split in Spark
-and DuckDB; hashes are md5/sha256 hex strings (identical).
+identical across engines); token arrays come from the corpus tokenizer in
+functions/text.py (`TOKENS`, lower + `\\s+` split; the oracles split the
+same way in DuckDB, exact on the ASCII fixtures); hashes are md5/sha256 hex
+strings (identical).
 """
 
 from __future__ import annotations
@@ -21,10 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.io import fan_out, load
+from ..functions.text import TOKENS
 from ..registry import register
-
-# Tokenization shared by all text operators (lower + whitespace split).
-_TOKENS = "split(lower(text), '\\\\s+')"
 
 # Tiny per-language stopword lists for the heuristic language classifier.
 # Deterministic argmax with fixed preference order on ties.
@@ -79,7 +79,7 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     qa/build_corpus.py:50-79, which treats doc text as opaque strings.
     """
     docs = fan_out(load(spark, sf_dir, "documents"))
-    hits = docs.selectExpr("doc_id", "lang", f"{_TOKENS} AS toks").select(
+    hits = docs.selectExpr("doc_id", "lang", f"{TOKENS} AS toks").select(
         "doc_id",
         F.col("lang").alias("lang_actual"),
         *[
@@ -129,7 +129,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split once, derive counts once, ratios from the counted columns — the
     # raw expression repeated the split/distinct/aggregate per output column
     return (
-        docs.selectExpr("doc_id", "n_chars", f"{_TOKENS} AS toks", "lower(text) AS lt")
+        docs.selectExpr("doc_id", "n_chars", f"{TOKENS} AS toks", "lower(text) AS lt")
         .selectExpr(
             "doc_id",
             "n_chars",
@@ -183,7 +183,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniqueness ratios, combined into an integer 0-5 score."""
     docs = fan_out(load(spark, sf_dir, "documents"))
     t = docs.selectExpr(
-        "doc_id", "lang", "n_chars", "text", f"{_TOKENS} AS toks"
+        "doc_id", "lang", "n_chars", "text", f"{TOKENS} AS toks"
     ).select(
         "doc_id",
         "lang",
@@ -271,7 +271,7 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     `repetitive` gate. All per-row expression work — no shuffle."""
     docs = fan_out(load(spark, sf_dir, "documents"))
     return (
-        docs.selectExpr("doc_id", f"{_TOKENS} AS toks")
+        docs.selectExpr("doc_id", f"{TOKENS} AS toks")
         .filter("size(toks) >= 2")
         .selectExpr(
             "doc_id",
@@ -349,7 +349,7 @@ def token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     200+ tokens (bucket 20), with doc and token totals per bucket."""
     docs = fan_out(load(spark, sf_dir, "documents"))
     return (
-        docs.selectExpr(f"size({_TOKENS}) AS n_tokens")
+        docs.selectExpr(f"size({TOKENS}) AS n_tokens")
         .selectExpr("cast(least(n_tokens div 10, 20) as bigint) AS bucket", "n_tokens")
         .groupBy("bucket")
         .agg(
@@ -384,7 +384,7 @@ def arrow_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern to reach for when the vectorized kernel you need lives in a
     Python library (tokenizers, feature extractors) rather than in Spark.
 
-    The token split also exists as a JVM expression (_TOKENS above) — this
+    The token split also exists as a JVM expression (functions/text.py TOKENS) — this
     query pins the mapInArrow plumbing against the same oracle semantics."""
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -461,7 +461,7 @@ def token_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = fan_out(load(spark, sf_dir, "documents"))
     return (
-        docs.selectExpr("doc_id", f"{_TOKENS} AS toks")
+        docs.selectExpr("doc_id", f"{TOKENS} AS toks")
         .selectExpr(
             "doc_id",
             "CAST(size(toks) AS BIGINT) AS n_tokens",

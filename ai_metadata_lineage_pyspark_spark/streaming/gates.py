@@ -23,8 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.io import load, table_schema
+from ..functions.text import _SHINGLES_FROM_TOKS, _SQL_SHINGLES, SQL_TOKENS, TOKENS
 from ..operators.decontam import _BLOOM_K, _BLOOM_M_SMALL, _EVAL_MOD
-from ..operators.dedup import _SHINGLES_FROM_TOKS, _SQL_SHINGLES, _SQL_TOKENS, _TOKENS
 from ..registry import register
 from .sessions import run_to_memory
 
@@ -76,7 +76,7 @@ def _bloom_bits(spark: SparkSession, sf_dir: str) -> str:
     pos_exprs = ", ".join(_km_pos_spark("shingle", i) for i in range(_BLOOM_K))
     rows = (
         docs.filter(F.col("doc_id") % _EVAL_MOD == 0)
-        .selectExpr(f"{_TOKENS} AS toks")
+        .selectExpr(f"{TOKENS} AS toks")
         .filter("size(toks) >= 3")
         .selectExpr(f"explode({_SHINGLES_FROM_TOKS}) AS shingle")
         .selectExpr(f"explode(array({pos_exprs})) AS p")
@@ -95,7 +95,7 @@ def _bloom_bits(spark: SparkSession, sf_dir: str) -> str:
     WITH sh AS (
       SELECT doc_id, {_SQL_SHINGLES} AS shingles
       FROM documents
-      WHERE len({_SQL_TOKENS}) >= 3
+      WHERE len({SQL_TOKENS}) >= 3
     ),
     x AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     eval_pos AS (
@@ -229,7 +229,7 @@ def _gate_frame(docs: DataFrame, bits: str) -> DataFrame:
 def _shingled(docs: DataFrame) -> DataFrame:
     return (
         docs.filter(F.col("doc_id") % _EVAL_MOD != 0)
-        .selectExpr("doc_id", f"{_TOKENS} AS toks")
+        .selectExpr("doc_id", f"{TOKENS} AS toks")
         .filter("size(toks) >= 3")
         .selectExpr("doc_id", f"{_SHINGLES_FROM_TOKS} AS shingles")
     )
@@ -296,7 +296,7 @@ def streaming_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     stream = (
         read_documents_stream(spark, sf_dir)
-        .selectExpr(f"explode({_TOKENS}) AS token")
+        .selectExpr(f"explode({TOKENS}) AS token")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
         .orderBy(F.col("n_occurrences").desc(), F.col("token").asc())

@@ -115,3 +115,36 @@ def test_dot_unrolled_bitwise_equals_fold_on_fixture(spark, sf_dir):
         .count()
     )
     assert mism == 0
+
+
+# ---------------------------------------------------------------------------
+# Tokenizer contract: functions/text.TOKENS on Spark and SQL_TOKENS on DuckDB
+# return the same token arrays (empty strings included) on ASCII text over
+# the whitespace both engines' \s matches. The known divergences outside
+# that domain are listed in functions/text.py.
+# ---------------------------------------------------------------------------
+
+_TOKENIZER_EDGES = ["", " ", "a", " a", "B\t", "\n Z \r", "a\fB", "\t\t"]
+
+
+@given(texts=st.lists(st.text(alphabet="aBZ \t\n\r\f", max_size=12), min_size=1, max_size=20))
+@_SETTINGS
+def test_spark_and_duckdb_tokenizers_agree(spark, texts):
+    import duckdb
+
+    from ai_metadata_lineage_pyspark_spark.functions.text import SQL_TOKENS, TOKENS
+
+    texts = _TOKENIZER_EDGES + texts
+    got = [
+        list(r.toks)
+        for r in spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+        .selectExpr("i", f"{TOKENS} AS toks")
+        .orderBy("i")
+        .collect()
+    ]
+    con = duckdb.connect()
+    want = [
+        con.execute(f"SELECT {SQL_TOKENS} FROM (SELECT ?::VARCHAR AS text)", [t]).fetchone()[0]
+        for t in texts
+    ]
+    assert got == want, texts

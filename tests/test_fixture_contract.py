@@ -155,3 +155,19 @@ def test_documents_source_format_contract(spark, sf_dir):
         .collect()
     )
     assert not bad, f"source format drift: {[r.source for r in bad]}"
+
+
+def test_documents_text_is_ascii_without_vertical_tab(sf_dir):
+    """The oracles split text with DuckDB's regexp_split_to_array, which
+    equals Spark's split only on ASCII text without \\x0b (the divergences
+    are listed in functions/text.py). Fail loudly if the fixture leaves
+    that domain."""
+    texts = [
+        t
+        for (t,) in duckdb.sql(
+            f"SELECT text FROM read_parquet('{sf_dir}/documents.parquet')"
+        ).fetchall()
+    ]
+    assert texts
+    bad = [t[:40] for t in texts if not t.isascii() or "\x0b" in t]
+    assert not bad, f"documents.text outside the tokenizer contract: {bad[:5]}"

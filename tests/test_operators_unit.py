@@ -4,7 +4,9 @@ independent of the fixture parquet, so failures localize to the operator.
 
 from __future__ import annotations
 
+import hashlib
 import math
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -859,27 +861,10 @@ def test_simhash64_hi_half_matches_32bit_fingerprint(spark, tmp_path):
     spark.createDataFrame(rows, ["doc_id", "text", "n_chars"]).write.parquet(
         str(tmp_path / "documents.parquet")
     )
-    from ai_metadata_lineage_pyspark_spark.operators.dedup import (
-        _SIMHASH64_SUMS,
-        simhash,
-    )
-    from ai_metadata_lineage_pyspark_spark.functions.io import fan_out
+    from ai_metadata_lineage_pyspark_spark.operators.dedup import _simhash64_fp, simhash
 
     docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
-    fp64 = {
-        r.doc_id: (r.hi, r.lo)
-        for r in docs.selectExpr("doc_id", f"{_SIMHASH64_SUMS} AS bs")
-        .selectExpr(
-            "doc_id",
-            "aggregate(zip_with(slice(bs, 1, 32), sequence(0, 31),"
-            " (s, k) -> if(s > 0, shiftleft(cast(1 as bigint), 31 - k),"
-            " cast(0 as bigint))), cast(0 as bigint), (a, v) -> a + v) AS hi",
-            "aggregate(zip_with(slice(bs, 33, 32), sequence(32, 63),"
-            " (s, k) -> if(s > 0, shiftleft(cast(1 as bigint), 63 - k),"
-            " cast(0 as bigint))), cast(0 as bigint), (a, v) -> a + v) AS lo",
-        )
-        .collect()
-    }
+    fp64 = {r.doc_id: (r.hi, r.lo) for r in _simhash64_fp(docs).collect()}
     fp32 = {
         r.doc_id: r.simhash_int for r in simhash(spark, str(tmp_path)).collect()
     }
@@ -977,43 +962,50 @@ def test_bpe_incremental_timings_cover_every_round(spark, sf_dir, monkeypatch, t
     assert logged == rounds
 
 
-def test_simhash_vectorized_equals_expression_fold(spark, sf_dir):
-    # the vectorized mapInPandas fingerprint (r9 default) must reproduce
-    # the expression fold bit-for-bit at BOTH widths: integer +-1 sums are
-    # order-independent, so any mismatch is a tokenization/hash bug
-    from ai_metadata_lineage_pyspark_spark.functions.io import fan_out, load
+def _simhash_reference(text: str, n_bits: int) -> int:
+    # Java's \s is [ \t\n\x0b\f\r]; Python's default \s also matches
+    # Unicode spaces, which Spark's split keeps inside a token
+    sums = [0] * n_bits
+    for tok in re.compile(r"\s+", re.ASCII).split(text.lower()):
+        h = int.from_bytes(hashlib.md5(tok.encode("utf-8")).digest()[: n_bits // 8], "big")
+        for k in range(n_bits):
+            sums[k] += 1 if h >> (n_bits - 1 - k) & 1 else -1
+    return sum(1 << (n_bits - 1 - k) for k in range(n_bits) if sums[k] > 0)
+
+
+def test_simhash_folds_match_a_python_reference(spark, sf_dir):
+    # both fingerprint widths against a pure-Python SimHash over the
+    # fixture docs plus docs holding every ASCII whitespace character and
+    # Unicode spaces that Spark's split keeps inside a token
+    from ai_metadata_lineage_pyspark_spark.functions.io import load
     from ai_metadata_lineage_pyspark_spark.operators.dedup import (
-        _SIMHASH64_SUMS,
+        _simhash64_fp,
         _simhash_expr,
-        _simhash_fp_pandas,
     )
 
-    docs = fan_out(load(spark, sf_dir, "documents"))
-    vec32 = {
-        r.doc_id: (r.simhash_int, r.simhash_hex)
-        for r in _simhash_fp_pandas(docs, 32).collect()
-    }
-    exp32 = {
-        r.doc_id: (r.simhash_int, r.simhash_hex)
-        for r in _simhash_expr(docs).collect()
-    }
-    assert vec32 == exp32
-    vec64 = {r.doc_id: (r.hi, r.lo) for r in _simhash_fp_pandas(docs, 64).collect()}
-    exp64 = {
-        r.doc_id: (r.hi, r.lo)
-        for r in docs.selectExpr("doc_id", f"{_SIMHASH64_SUMS} AS bs")
-        .selectExpr(
-            "doc_id",
-            "aggregate(zip_with(slice(bs, 1, 32), sequence(0, 31),"
-            " (s, k) -> if(s > 0, shiftleft(cast(1 as bigint), 31 - k),"
-            " cast(0 as bigint))), cast(0 as bigint), (a, v) -> a + v) AS hi",
-            "aggregate(zip_with(slice(bs, 33, 32), sequence(32, 63),"
-            " (s, k) -> if(s > 0, shiftleft(cast(1 as bigint), 63 - k),"
-            " cast(0 as bigint))), cast(0 as bigint), (a, v) -> a + v) AS lo",
+    odd = [
+        "tab\there new\nline cr\rhere",
+        "form\ffeed vertical\x0btab  double  spaces",
+        " leading and trailing ",
+        "no\xa0break em\u2003space next\x85line",
+        "Mixed\xa0Case\u2003WORDS\x85here and\tthere",
+    ]
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = docs.unionByName(
+        spark.createDataFrame(
+            [(-1 - i, t) for i, t in enumerate(odd)], "doc_id long, text string"
         )
-        .collect()
-    }
-    assert vec64 == exp64
+    )
+    texts = dict(docs.collect())
+    assert len(texts) > len(odd)
+
+    fp32 = {r.doc_id: (r.simhash_int, r.simhash_hex) for r in _simhash_expr(docs).collect()}
+    want32 = {d: _simhash_reference(t, 32) for d, t in texts.items()}
+    assert fp32 == {d: (v, f"{v:08x}") for d, v in want32.items()}
+
+    fp64 = {r.doc_id: (r.hi, r.lo) for r in _simhash64_fp(docs).collect()}
+    want64 = {d: _simhash_reference(t, 64) for d, t in texts.items()}
+    assert fp64 == {d: (v >> 32, v & 0xFFFFFFFF) for d, v in want64.items()}
 
 
 def test_chargram_minhash_pairs_subset_of_exact(spark, sf_dir):

@@ -53,23 +53,18 @@ def main() -> None:
     reg = all_queries()
     out = {}
 
+    from ai_metadata_lineage_pyspark_spark.functions.text import (
+        _SHINGLES_FROM_TOKS,
+        TOKENS,
+    )
     from ai_metadata_lineage_pyspark_spark.operators.dedup import (
         _HASH_PAIRS_SPARK,
-        _SHINGLES_FROM_TOKS,
         _sig_exprs_spark,
         _simhash_expr,
-        _simhash_fp_pandas,
-        _TOKENS,
     )
 
-    # --- simhash fingerprint: expression fold vs vectorized mapInPandas ---
+    # --- simhash fingerprint: expression fold ---
     out["simhash_fp_expr"] = median3(lambda: _simhash_expr(docs).count())
-    out["simhash_fp_vectorized"] = median3(
-        lambda: _simhash_fp_pandas(docs, 32).count()
-    )
-    out["simhash64_fp_vectorized"] = median3(
-        lambda: _simhash_fp_pandas(docs, 64).count()
-    )
 
     # --- minhash signature chain: the registered expression pipeline vs a
     # vectorized twin (md5 per DISTINCT shingle per batch, numpy mins) ---
@@ -122,7 +117,7 @@ def main() -> None:
             f"sig_{j} bigint" for j in range(8)
         )
         return (
-            docs.selectExpr("doc_id", f"{_TOKENS} AS toks")
+            docs.selectExpr("doc_id", f"{TOKENS} AS toks")
             .filter("size(toks) >= 3")
             .selectExpr("doc_id", f"{_SHINGLES_FROM_TOKS} AS shingles")
             .selectExpr("doc_id", "size(shingles) AS n_shingles", "shingles")
@@ -139,7 +134,7 @@ def main() -> None:
 
     # --- shingle build alone (transform lambda, output-bound) ---
     out["shingle_build"] = median3(
-        lambda: docs.selectExpr("doc_id", f"{_TOKENS} AS toks")
+        lambda: docs.selectExpr("doc_id", f"{TOKENS} AS toks")
         .filter("size(toks) >= 3")
         .selectExpr("doc_id", f"{_SHINGLES_FROM_TOKS} AS shingles")
         .selectExpr("doc_id", "size(shingles) AS n")
@@ -148,7 +143,7 @@ def main() -> None:
     )
     # hp stage on top of shingles (md5-per-occurrence transform lambda)
     out["shingle_plus_hp"] = median3(
-        lambda: docs.selectExpr("doc_id", f"{_TOKENS} AS toks")
+        lambda: docs.selectExpr("doc_id", f"{TOKENS} AS toks")
         .filter("size(toks) >= 3")
         .selectExpr("doc_id", f"{_SHINGLES_FROM_TOKS} AS shingles")
         .selectExpr("doc_id", f"{_HASH_PAIRS_SPARK} AS hp")
