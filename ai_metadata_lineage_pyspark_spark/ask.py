@@ -21,25 +21,26 @@ retrieved-doc count — qa/ask.py:505-512).
 Usage:
     python -m ai_metadata_lineage_pyspark_spark.ask
 
-Driver-side by design: the heavy lifting (extraction, graph closure,
-embedding) stays in Spark jobs. What the session keeps on the driver is the
-known-column set, the capped evidence lists of at most
-graphqa.MAX_CACHED_COLUMNS columns (see graphqa.LineageGraph), and the
-retrieval index: a flat exact index, as the reference's FAISS
-IndexFlatL2 is, of at most embed.MAX_INDEX_DOCS docs.
+Driver-side by design: the heavy lifting (extraction, stitching, embedding)
+stays in Spark jobs, and the session answers on the driver from what it
+collects once, as the reference loads its outputs once at startup
+(qa/ask.py:462-471). The first ask() of a session makes two collects:
 
-The first ask() of a session collects the known columns
-(graphqa.prepare_graph) and the retrieval index (QASession.index): the
-embedded corpus joined once to its refs and texts and collected by one
-action into an embed.FlatIndex, with no checkpoint held. A column's
-evidence lists are computed on the first question that names it: one
-column closure seeded with that question's new columns and one script
-closure seeded with their scripts, collected in one action, the closures'
-checkpoints released on return. Retrieval runs no Spark job: the index
-scores every doc in-process, bit-identically to embed.top_k's cosine, and
-keeps the same top k (score DESC, doc_id ASC). A question whose columns
-were all asked about before runs no Spark job at all; a question whose
-vector is zero (no tokens, or tokens that cancel) retrieves nothing.
+  * the lineage graph (graphqa.prepare_graph): the column graph, each
+    column's scripts, the script links and the gold writes, in one action,
+    at most graphqa.MAX_LINEAGE_ROWS rows;
+  * the retrieval index (QASession.index): the embedded corpus joined once
+    to its refs and texts, at most embed.MAX_INDEX_DOCS docs, into an
+    embed.FlatIndex, a flat exact index as the reference's FAISS
+    IndexFlatL2 is.
+
+No checkpoint is held for either. Every ask, the first included, then
+answers in process: a column's evidence lists are a BFS over the driver
+graph (kept for at most graphqa.MAX_CACHED_COLUMNS columns), and the index
+scores every doc bit-identically to embed.top_k's cosine and keeps the same
+top k (score DESC, doc_id ASC). Only the first ask runs Spark jobs; a
+question whose vector is zero (no tokens, or tokens that cancel) retrieves
+nothing.
 """
 
 from __future__ import annotations
@@ -66,10 +67,8 @@ class QASession:
     """Extracted lineage tables + embedded corpus, built once per process
     from one extraction of the scripts (the reference loads outputs/ + the
     FAISS store once at startup, qa/ask.py:462-471). The first ask()
-    prepares the lineage graph over them, which keeps each asked column's
-    capped evidence lists for the session, and collects the retrieval
-    index to the driver. An ask() about columns already asked runs no
-    Spark job (see the module docstring)."""
+    collects the lineage graph and the retrieval index to the driver; no
+    ask() after it runs a Spark job (see the module docstring)."""
 
     columns: DataFrame
     edges: DataFrame
@@ -80,9 +79,8 @@ class QASession:
 
     @cached_property
     def lineage(self) -> LineageGraph:
-        """The prepared lineage graph, built on first use. It holds no JVM
-        block, only the known columns and at most MAX_CACHED_COLUMNS
-        columns' capped lists."""
+        """The lineage graph, collected to the driver on first use. It holds
+        no JVM block."""
         return prepare_graph(self.columns, self.edges, self.assets)
 
     @cached_property
@@ -98,13 +96,13 @@ class QASession:
         facts = _facts(spark)
         cols, dfs = columns_table(facts), dataframes_table(facts)
         edges, assets = edges_table(cols, dfs), assets_table(facts)
-        corpus = build_corpus(assets, dfs, cols, edges).localCheckpoint(eager=False)
+        corpus = build_corpus(assets, dfs, cols, edges)
         return cls(
             columns=cols,
             edges=edges,
             assets=assets,
             corpus=corpus,
-            embedded=embed_documents(corpus).localCheckpoint(eager=False),
+            embedded=embed_documents(corpus),
             client=client or MockModelClient(),
         )
 

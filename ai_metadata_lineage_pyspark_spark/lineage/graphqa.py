@@ -16,12 +16,13 @@ Spark-native re-expression of qa/ask.py's deterministic core:
   * build_evidence (qa/ask.py:391-450)          -> build_evidence()
 
 The reference loads its lineage outputs once at startup and answers every
-question from them (qa/ask.py:457-471). Here prepare_graph() collects the
-known-column set, and a LineageGraph keeps each column's capped evidence
-lists on the driver from the first question that names the column: one
-column closure seeded with that question's new columns and one script
-closure seeded with their scripts compute them. A question whose columns
-were all asked about before runs no Spark job in build_evidence().
+question by in-process traversal (qa/ask.py:211-223, 325-340, 457-471).
+Here prepare_graph() does the same: one action collects the four small
+tables the evidence reads (the column graph, column -> scripts, the script
+links and the gold writes) into a driver-side LineageGraph, and every
+question's evidence is then a BFS over those dicts. build_evidence() runs
+no Spark job. The distributed closures above stay for the registered
+lineage queries, which run them under DuckDB oracles.
 
 The LLM answer step stays behind the pluggable client in enrich.py —
 deterministic artifacts never depend on it (README.md:111-113 rule).
@@ -29,15 +30,15 @@ deterministic artifacts never depend on it (README.md:111-113 rule).
 
 from __future__ import annotations
 
+import functools
 import re
-from collections.abc import Sequence, Set
+from collections.abc import Iterable, Mapping, Sequence, Set
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.graph import PreparedEdges, bfs_closure, prepare_edges
-from ..session import checkpoint_scope, iter_checkpoint
 
 MAX_IMPACT_COLS = 3
 BFS_NODE_LIMIT = 2000
@@ -176,113 +177,124 @@ class ColumnEvidence:
     gold: tuple[tuple[str, str], ...]
 
 
+class LineageGraphTooLarge(RuntimeError):
+    """The lineage tables hold more than `MAX_LINEAGE_ROWS` rows: the
+    session's graph stops instead of running the driver out of memory."""
+
+
+# A row is two or three short strings (column and script names, a reason, a
+# path), a few hundred bytes as Python objects, so 1,000,000 rows is a few
+# hundred MB of the 8g default driver: about 20x the 49,206 rows of the
+# 5,000-script repository of tools/repo_scale_lineage_probe.py.
+MAX_LINEAGE_ROWS = 1_000_000
+
+
+def lineage_rows(columns: DataFrame, edges: DataFrame, assets: DataFrame) -> DataFrame:
+    """(kind, a, b, c): the four tables the evidence reads, as one tagged
+    union: the column graph ("edge": src, dst, reason), each column's
+    scripts ("column": col, script_name), the script links ("link":
+    from_script, to_script) and every script's gold writes ("gold":
+    script_name, path)."""
+    from .stitch import stitch_links
+
+    def tagged(kind: str, df: DataFrame, *cols: str) -> DataFrame:
+        return df.select(F.lit(kind).alias("kind"), *(F.col(c).alias(k) for k, c in zip("abc", cols)))
+
+    parts = [
+        tagged("edge", column_graph(edges), "src", "dst", "reason"),
+        tagged("column", column_scripts(columns), "col", "script_name"),
+        tagged("link", stitch_links(assets).select("from_script", "to_script").distinct(), "from_script", "to_script"),
+        tagged("gold", gold_outputs(assets, assets), "script_name", "path"),
+    ]
+    return functools.reduce(lambda x, y: x.unionByName(y, allowMissingColumns=True), parts)
+
+
+def _reach(adj: Mapping[str, Iterable[str]], seeds: Iterable[str], max_depth: int, cap: int | None = None) -> list[str]:
+    """The nodes within `max_depth` hops downstream of `seeds`, seeds
+    excluded, by (min depth, node): bfs_closure's closure of the seed set,
+    in column_closure's rank order. With `cap`, the first `cap` of them; the
+    BFS stops at the first depth that fills it."""
+    seen = set(seeds)
+    frontier, out = list(seen), []
+    for _ in range(max_depth):
+        if cap is not None and len(out) >= cap:
+            break
+        frontier = sorted({v for u in frontier for v in adj.get(u, ()) if v not in seen})
+        if not frontier:
+            break
+        seen.update(frontier)
+        out += frontier
+    return out[:cap]
+
+
 @dataclass
 class LineageGraph:
-    """One repository's known columns, and the evidence lists of the
-    columns asked about so far.
+    """One repository's lineage on the driver, as prepare_graph() collects
+    it: each column's one-hop (dst, reason) edges, sorted, and downstream
+    columns; each known column's scripts; each script's downstream scripts
+    (those that read a path it writes) and gold write paths.
 
-    A column's lists are computed on the first question that names it and
-    kept for at most MAX_CACHED_COLUMNS columns, the least recently asked
-    dropped first. The driver holds the |known| column names (the
-    reference keeps the same set, qa/ask.py:202-207) and at most
-    MAX_CACHED_COLUMNS x (MAX_IMPACT_SHOW + MAX_REASON_SHOW +
-    MAX_SCRIPTS_SHOW + MAX_GOLD_SHOW) strings or pairs, whatever the
-    repository's edge or link counts. It holds no JVM block: `columns`,
-    `edges` and `assets` are the session's own tables.
+    A column's evidence lists are computed on the first question that names
+    it and kept for at most MAX_CACHED_COLUMNS columns, the least recently
+    asked dropped first. It holds no JVM block.
     """
 
-    columns: DataFrame
-    edges: DataFrame
-    assets: DataFrame
-    known: frozenset[str]
+    reasons: dict[str, list[tuple[str, str]]]
+    children: dict[str, set[str]]
+    column_scripts: dict[str, list[str]]
+    links: dict[str, list[str]]
+    gold: dict[str, list[str]]
     cached: dict[str, ColumnEvidence] = field(default_factory=dict)
 
+    @property
+    def known(self) -> Set[str]:
+        """All column names in the universe (qa/ask.py:202-207)."""
+        return self.column_scripts.keys()
+
     def evidence(self, cols: Sequence[str]) -> list[ColumnEvidence]:
-        """The lists of each of `cols`; those not yet kept are computed in
-        one batch."""
-        missing = [c for c in cols if c not in self.cached]
-        if missing:
-            self.cached.update(_column_evidence(self.columns, self.edges, self.assets, missing))
+        """The lists of each of `cols`; those not yet kept are computed."""
+        for c in cols:
+            if c not in self.cached:
+                self.cached[c] = self._lists(c)
         out = [self.cached.pop(c) for c in cols]
         self.cached.update(zip(cols, out))  # most recently asked last
         while len(self.cached) > MAX_CACHED_COLUMNS:
             del self.cached[next(iter(self.cached))]
         return out
 
-
-def prepare_graph(columns: DataFrame, edges: DataFrame, assets: DataFrame) -> LineageGraph:
-    """Collect the known columns; each column's evidence lists are
-    computed when a question first names it."""
-    return LineageGraph(columns, edges, assets, frozenset(known_columns(columns)))
-
-
-def _column_evidence(
-    columns: DataFrame, edges: DataFrame, assets: DataFrame, cols: Sequence[str]
-) -> dict[str, ColumnEvidence]:
-    """Each column's capped lists, collected in one action. The closures'
-    checkpoints are released before it returns."""
-    lists: dict[str, dict[str, list]] = {c: {"impact": [], "reasons": [], "scripts": [], "gold": []} for c in cols}
-    with checkpoint_scope():
-        rows = _evidence_lists(columns, edges, assets, cols).collect()
-    for r in sorted(rows, key=lambda r: r.rank):
-        if r.kind == "reasons":
-            value = f"{r.key} -> {r.a}: {r.b}"
-        elif r.kind == "gold":
-            value = (r.a, r.b)
-        else:
-            value = r.a
-        lists[r.key][r.kind].append(value)
-    return {c: ColumnEvidence(**{kind: tuple(v) for kind, v in by_kind.items()}) for c, by_kind in lists.items()}
-
-
-def _evidence_lists(columns: DataFrame, edges: DataFrame, assets: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """(kind, key, rank, a, b): the four capped lists of each column `key`
-    of `cols`, ranked from 1 in show order, as one tagged union."""
-
-    def first(df: DataFrame, key: str, order: Sequence[str], cap: int) -> DataFrame:
-        rank = F.row_number().over(Window.partitionBy(key).orderBy(*order))
-        return df.withColumn("rank", rank).filter(F.col("rank") <= cap)
-
-    def tagged(kind: str, df: DataFrame, key: str, a: str, b: str | None = None) -> DataFrame:
-        return df.select(
-            F.lit(kind).alias("kind"),
-            F.col(key).alias("key"),
-            "rank",
-            F.col(a).alias("a"),
-            (F.col(b) if b else F.lit(None).cast("string")).alias("b"),
+    def _lists(self, col: str) -> ColumnEvidence:
+        """One column's capped lists, by in-process BFS: the closures of
+        column_closure (depth 20) and downstream_scripts (depth 10)."""
+        seeds = self.column_scripts.get(col, [])
+        scripts = sorted({*seeds, *_reach(self.links, seeds, 10)})
+        gold = sorted((path, s) for s in scripts for path in self.gold.get(s, ()))
+        return ColumnEvidence(
+            impact=tuple(_reach(self.children, [col], 20, min(BFS_NODE_LIMIT, MAX_IMPACT_SHOW))),
+            reasons=tuple(f"{col} -> {dst}: {reason}" for dst, reason in self.reasons.get(col, [])[:MAX_REASON_SHOW]),
+            scripts=tuple(scripts[:MAX_SCRIPTS_SHOW]),
+            gold=tuple(gold[:MAX_GOLD_SHOW]),
         )
 
-    graph = iter_checkpoint(column_graph(edges))
-    impact = column_closure(column_edges(graph), cols).filter(F.col("rank") <= MAX_IMPACT_SHOW)
-    reasons = first(graph.filter(F.col("src").isin(list(cols))), "src", ["dst", "reason"], MAX_REASON_SHOW)
-    # each column's impacted scripts: its seed scripts plus their downstream
-    # scripts, from one closure seeded with the seed scripts of all of `cols`
-    seeds = column_scripts(columns).filter(F.col("col").isin(list(cols)))
-    down = downstream_scripts(
-        script_edges(assets), seeds.select(F.col("script_name").alias("seed")).distinct()
-    ).select(F.col("seed").alias("script_name"), F.col("script_name").alias("down"))
-    impacted = seeds.unionByName(
-        seeds.join(down, "script_name").select("col", F.col("down").alias("script_name"))
-    ).distinct()
-    scripts = first(impacted, "col", ["script_name"], MAX_SCRIPTS_SHOW)
-    gold = first(
-        impacted.join(gold_outputs(assets, impacted), "script_name"),
-        "col",
-        ["path", "script_name"],
-        MAX_GOLD_SHOW,
-    )
-    return (
-        tagged("impact", impact, "seed", "impacted_col")
-        .unionByName(tagged("reasons", reasons, "src", "dst", "reason"))
-        .unionByName(tagged("scripts", scripts, "col", "script_name"))
-        .unionByName(tagged("gold", gold, "col", "path", "script_name"))
-    )
+
+def prepare_graph(columns: DataFrame, edges: DataFrame, assets: DataFrame) -> LineageGraph:
+    """Collect the lineage tables to the driver in one action, at most
+    MAX_LINEAGE_ROWS rows; raises LineageGraphTooLarge past the cap."""
+    rows = lineage_rows(columns, edges, assets).limit(MAX_LINEAGE_ROWS + 1).collect()
+    if len(rows) > MAX_LINEAGE_ROWS:
+        raise LineageGraphTooLarge(
+            f"lineage graph reached {len(rows)} rows, over the driver cap MAX_LINEAGE_ROWS={MAX_LINEAGE_ROWS}"
+        )
+    tables: dict[str, dict] = {"edge": {}, "column": {}, "link": {}, "gold": {}}
+    for r in rows:
+        tables[r.kind].setdefault(r.a, []).append((r.b, r.c) if r.kind == "edge" else r.b)
+    edge, column, link, gold = tables.values()
+    children = {src: {dst for dst, _ in out} for src, out in edge.items()}
+    return LineageGraph({src: sorted(out) for src, out in edge.items()}, children, column, link, gold)
 
 
 def build_evidence(question: str, lineage: LineageGraph) -> str:
     """Assemble the capped, ordered evidence text (qa/ask.py:391-450) from
-    the question's columns' lists; it runs Spark jobs only for columns no
-    earlier question named.
+    the question's columns' lists, on the driver: it runs no Spark job.
 
     A multi-column question lists each column's impact and reasons, then
     the merged scripts and gold outputs of all its columns. The merge is

@@ -6,8 +6,8 @@ operators (qa/ask.py:211-223 `downstream_closure`, :325-340
 `bfs_downstream_scripts`): Spark has no recursive CTE, so the closure is a
 driver loop of frontier joins with early termination. The same helper powers
 the lineage-engine column/script closures in `..lineage.graphqa`, which cut
-each edge list once (`prepare_edges`) and run every closure of a Q&A
-session over it.
+each edge list once (`prepare_edges`); the registered lineage queries run
+them, while a Q&A session traverses its driver-side graph instead.
 
 Scale notes: each hop is one shuffle join keyed on the edge source; the
 frontier is deduplicated per hop so work is proportional to newly reached

@@ -384,8 +384,13 @@ def arrow_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern to reach for when the vectorized kernel you need lives in a
     Python library (tokenizers, feature extractors) rather than in Spark.
 
-    The token split also exists as a JVM expression (functions/text.py TOKENS) — this
-    query pins the mapInArrow plumbing against the same oracle semantics."""
+    The split is pyarrow's RE2 `\\s+` over `utf8_lower`, as DuckDB's is, not
+    the JVM's `functions/text.py::TOKENS`: RE2's `\\s` does not match `\\x0b`
+    (Java's does, so `a\\x0bb` is one token here and two there), and
+    pyarrow lowercases non-ASCII text differently (`İx` becomes `ix` here,
+    `i̇x` in Spark). On such text its `n_tokens` differs from the JVM token
+    counts of `text_token_stats` and `token_length_histogram`; the fixtures
+    hold neither, and this query's oracle is DuckDB's RE2 split."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

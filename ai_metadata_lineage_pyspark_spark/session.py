@@ -10,8 +10,6 @@ semantics are stable and match the DuckDB oracle.
 from __future__ import annotations
 
 import os
-import threading
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -93,23 +91,13 @@ def iter_checkpoint(df, eager: bool = True):
     Everything else keeps the local default because the swap is a
     deploy-time decision, not a per-operator one.
 
-    Inside a `checkpoint_scope()` block the cut is also registered with the
-    innermost scope, which releases it when the block exits.
+    The caller owns the cut: `release_checkpoint` frees it. Lineage Q&A
+    makes none; its sessions collect their graph to the driver once.
     """
     if os.environ.get("SPARK_GRAFT_RELIABLE_CKPT") == "1":
         ensure_checkpoint_dir(df.sparkSession)
-        cut = df.checkpoint(eager=eager)
-    else:
-        cut = df.localCheckpoint(eager=eager)
-    scopes = getattr(_SCOPES, "stack", None)
-    if scopes:
-        scopes[-1].append(cut)
-    return cut
-
-
-# Open checkpoint scopes of the current thread, innermost last: each is the
-# list of the checkpoints iter_checkpoint made while it was open.
-_SCOPES = threading.local()
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
 
 
 def _rows_rdd(cut: DataFrame):
@@ -136,20 +124,3 @@ def release_checkpoint(df: DataFrame) -> None:
     handle on it only from its finalizer thread, up to a second later."""
     _rows_rdd(df).unpersist(False)
 
-
-@contextmanager
-def checkpoint_scope():
-    """Release, when the block exits, every checkpoint iter_checkpoint made
-    inside it on this thread. For iterative round state whose results the
-    block has collected before it exits (the closures of one lineage
-    question); DataFrames that still read those checkpoints must not be used
-    afterwards."""
-    stack = _SCOPES.__dict__.setdefault("stack", [])
-    made: list[DataFrame] = []
-    stack.append(made)
-    try:
-        yield
-    finally:
-        stack.pop()
-        for df in made:
-            release_checkpoint(df)

@@ -4,11 +4,12 @@ It caps its script and gold-output lists AFTER ordering them: above the cap
 it lists the first names in order, not an arbitrary subset. The prepared
 graph keeps each asked column's capped lists, no longer than their caps,
 for at most MAX_CACHED_COLUMNS columns; a multi-column question's merged
-lists equal a column-by-column build. A QASession prepares the graph and
-collects its retrieval index once, on its first ask, and holds no
-checkpoint for either; an ask about columns asked before runs no Spark job.
-Its retrieval equals a brute-force cosine ranking, and `retrieve_top_k`'s
-distributed ranking to the bit, ties included.
+lists equal a column-by-column build, and each column's lists equal those
+the distributed closures give. A QASession collects its lineage graph and
+its retrieval index once, on its first ask, and holds no checkpoint for
+either; no later ask runs a Spark job. Its retrieval equals a brute-force
+cosine ranking, and `retrieve_top_k`'s distributed ranking to the bit, ties
+included.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ import time
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from ai_metadata_lineage_pyspark_spark.ask import QASession
 from ai_metadata_lineage_pyspark_spark.lineage import embed, graphqa, queries, stitch
@@ -40,11 +42,17 @@ from ai_metadata_lineage_pyspark_spark.lineage.graphqa import (
     MAX_IMPACT_SHOW,
     MAX_REASON_SHOW,
     MAX_SCRIPTS_SHOW,
+    ColumnEvidence,
+    LineageGraphTooLarge,
     build_evidence,
     column_closure,
     column_edges,
     column_graph,
+    downstream_scripts,
+    gold_outputs,
     prepare_graph,
+    script_edges,
+    seed_scripts,
 )
 
 _N_WRITERS = 70  # > MAX_GOLD_SHOW gold paths, > MAX_SCRIPTS_SHOW scripts
@@ -106,27 +114,33 @@ def test_lists_below_the_caps_are_complete(spark):
 # --- one multi-seed closure per question ------------------------------------
 
 _N_WIDE = MAX_IMPACT_SHOW + 5  # `amount` has more descendants than are shown
+_COLUMN_CHAIN = [f"k{i:02d}" for i in range(26)]  # 25 hops, past the depth-20 closure
+_SCRIPT_CHAIN = [f"p{i:02d}" for i in range(13)]  # 12 hops, past the depth-10 closure
 
 
 def _wide_repo(spark):
     """`amount` feeds _N_WIDE columns (one of them back into `amount`);
     `fee` reaches one of them through `fee_usd`. Script `wide` holds the
     `amount` columns, `fees` the `fee` ones, and `report` reads what `fees`
-    writes."""
+    writes. Column `k00` heads a column chain longer than the column
+    closure's depth, and its script `p00` heads a script chain longer than
+    the script closure's depth, each script of which writes a gold path."""
     wide = [f"d{i:02d}" for i in range(_N_WIDE)]
     col_edges = (
         [("wide", w, "amount", f"derive {w}") for w in wide]
         + [("wide", "e0", "d00", "deeper"), ("wide", "amount", "d01", "cycle")]
         + [("fees", "fee_usd", "fee", "convert"), ("fees", "fee_usd", "fee", "round")]
         + [("fees", "d03", "fee_usd", "spill")]
+        + [("chain", dst, src, "step") for src, dst in zip(_COLUMN_CHAIN, _COLUMN_CHAIN[1:])]
     )
     edges = spark.createDataFrame(
         col_edges, "script_name string, target_col string, src_col string, reason string"
     )
     columns = spark.createDataFrame(
         [("wide", "amount", []), ("fees", "fee", []), ("fees", "fee_usd", ["fee"]),
-         ("report", "total", ["fee_usd"])]
-        + [("wide", w, ["amount"]) for w in wide],
+         ("report", "total", ["fee_usd"]), ("p00", "k00", [])]
+        + [("wide", w, ["amount"]) for w in wide]
+        + [("chain", dst, [src]) for src, dst in zip(_COLUMN_CHAIN, _COLUMN_CHAIN[1:])],
         "script_name string, col_name string, derived_from array<string>",
     )
     asset_rows = [
@@ -136,6 +150,10 @@ def _wide_repo(spark):
         ("report", "read", "s3a://lake/silver/fees/"),
         ("report", "write", "s3a://lake/gold/report/"),
     ]
+    for i, script in enumerate(_SCRIPT_CHAIN):
+        asset_rows += [(script, "write", f"s3a://lake/silver/{script}/"), (script, "write", f"s3a://lake/gold/{script}/")]
+        if i:
+            asset_rows.append((script, "read", f"s3a://lake/silver/{_SCRIPT_CHAIN[i - 1]}/"))
     assets = spark.createDataFrame(asset_rows, "script_name string, direction string, path string")
     return col_edges, columns, edges, asset_rows, assets
 
@@ -335,6 +353,16 @@ def test_asks_about_asked_columns_run_no_jobs(spark):
         assert _jobs_in(spark, lambda: qa.ask(q)) == _jobs_in(spark, lambda: qa.retrieve(q)) == 0
 
 
+def test_only_a_sessions_first_ask_runs_jobs(spark):
+    qa = QASession.build(spark)
+    assert _jobs_in(spark, lambda: qa.ask(_ASKS[0])) > 0  # collects the graph and the index
+
+    for q in _ASKS[1:]:
+        named = graphqa.candidate_columns(q, qa.lineage.known)
+        assert named and not set(named) & set(qa.lineage.cached)  # no earlier ask named them
+        assert _jobs_in(spark, lambda: qa.ask(q)) == 0
+
+
 def _cancelling_tokens() -> str:
     """Two tokens hashed to one bucket with opposite signs: a question of
     both embeds to the zero vector although it has tokens."""
@@ -425,9 +453,77 @@ def test_kept_columns_are_the_most_recently_asked(spark, monkeypatch):
     build_evidence(ask["total"], lineage)  # drops `fee`, asked least recently
     assert list(lineage.cached) == ["amount", "total"]
 
-    assert _jobs_in(spark, lambda: build_evidence(ask["fee"], lineage)) > 0
+    assert _jobs_in(spark, lambda: build_evidence(ask["fee"], lineage)) == 0
     assert list(lineage.cached) == ["total", "fee"]
     assert build_evidence(ask["amount"], lineage) == first
+
+
+def _distributed_evidence(columns, edges, assets, cols) -> dict[str, ColumnEvidence]:
+    """Each of `cols`'s lists from the distributed closures: one column
+    closure and one script closure, each seeded with all of `cols`."""
+    spark = columns.sparkSession
+    graph = column_graph(edges)
+    impact, reasons = {}, {}
+    for r in column_closure(column_edges(graph), cols).filter(F.col("rank") <= graphqa.MAX_IMPACT_SHOW).collect():
+        impact.setdefault(r.seed, []).append((r.rank, r.impacted_col))
+    for r in graph.filter(F.col("src").isin(cols)).collect():
+        reasons.setdefault(r.src, []).append((r.dst, r.reason))
+    seeds = {c: set() for c in cols}
+    for r in graphqa.column_scripts(columns).filter(F.col("col").isin(cols)).collect():
+        seeds[r.col].add(r.script_name)
+    down = {}
+    for r in downstream_scripts(script_edges(assets), seed_scripts(columns, cols)).collect():
+        down.setdefault(r.seed, set()).add(r.script_name)
+    impacted = {c: seeds[c].union(*(down.get(s, ()) for s in seeds[c])) for c in cols}
+    scripts = spark.createDataFrame([(s,) for c in cols for s in impacted[c]], "script_name string")
+    gold = [(r.path, r.script_name) for r in gold_outputs(assets, scripts).collect()]
+    return {
+        c: ColumnEvidence(
+            impact=tuple(n for _, n in sorted(impact.get(c, []))),
+            reasons=tuple(f"{c} -> {d}: {why}" for d, why in sorted(reasons.get(c, []))[:MAX_REASON_SHOW]),
+            scripts=tuple(sorted(impacted[c])[:MAX_SCRIPTS_SHOW]),
+            gold=tuple(sorted(g for g in gold if g[1] in impacted[c])[:MAX_GOLD_SHOW]),
+        )
+        for c in cols
+    }
+
+
+def _assert_driver_lists_are_distributed(columns, edges, assets) -> graphqa.LineageGraph:
+    lineage = prepare_graph(columns, edges, assets)
+    cols = sorted(lineage.known)
+    assert dict(zip(cols, lineage.evidence(cols))) == _distributed_evidence(columns, edges, assets, cols)
+    return lineage
+
+
+def test_driver_lists_equal_the_distributed_closures_on_the_fixture(spark):
+    qa = QASession.build(spark)
+    lineage = _assert_driver_lists_are_distributed(qa.columns, qa.edges, qa.assets)
+    assert len(lineage.known) > 20
+
+
+def test_driver_lists_equal_the_distributed_closures_on_deep_and_wide_graphs(spark, monkeypatch):
+    _, columns, edges, _, assets = _wide_repo(spark)
+    lineage = _assert_driver_lists_are_distributed(columns, edges, assets)
+    head = lineage.cached["k00"]
+    assert head.impact == tuple(_COLUMN_CHAIN[1:21])  # the chain is cut at depth 20
+    assert head.scripts == ("chain", *_SCRIPT_CHAIN[:11])  # p00 and 10 hops downstream
+    assert head.gold == tuple((f"s3a://lake/gold/{s}/", s) for s in _SCRIPT_CHAIN[:11])
+
+    # a hub past the per-seed node limit: `amount` reaches _N_WIDE + 1 columns
+    monkeypatch.setattr(graphqa, "BFS_NODE_LIMIT", 7)
+    lineage = _assert_driver_lists_are_distributed(columns, edges, assets)
+    assert len(lineage.cached["amount"].impact) == 7
+
+
+def test_graph_over_the_row_cap_fails_loudly(spark, monkeypatch):
+    _, columns, edges, _, assets = _wide_repo(spark)
+    n_rows = graphqa.lineage_rows(columns, edges, assets).count()
+    monkeypatch.setattr(graphqa, "MAX_LINEAGE_ROWS", n_rows)
+    assert prepare_graph(columns, edges, assets).known
+
+    monkeypatch.setattr(graphqa, "MAX_LINEAGE_ROWS", n_rows - 1)
+    with pytest.raises(LineageGraphTooLarge, match=f"reached {n_rows} rows"):
+        prepare_graph(columns, edges, assets)
 
 
 # --- the merge of per-column lists ------------------------------------------

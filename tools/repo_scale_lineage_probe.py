@@ -30,13 +30,13 @@ the run self-checking rather than merely big:
   column name (the reference's qa/ask.py design), so 834 path-disjoint
   replicas must not perturb it.
 
-A last stage times an interactive Q&A session over the full corpus: the
-lineage-graph preparation of its first ask (the known columns), the
-one-off collect of its retrieval index, then two asks, each computing the
-evidence lists of the columns it names first. It also prints the Spark
-jobs of one repeated retrieval per question (0: the index answers on the
-driver), the median latency of a repeated ask, and a hash of the
-retrieved refs, which a retrieval change must keep.
+A last stage times an interactive Q&A session over the full corpus: two
+asks, the first of which prepares the lineage graph and collects the
+retrieval index. Per ask it prints the wall time, the Spark jobs and a
+hash of the evidence text, which an evidence change must keep. It also
+prints the Spark jobs of one repeated retrieval per question (0: the index
+answers on the driver), the median latency of a repeated ask, and a hash
+of the retrieved refs, which a retrieval change must keep.
 
 Usage: python tools/repo_scale_lineage_probe.py [n_scripts] [workdir]
 Emits one JSON line per stage + a final summary; exit 1 on any invariant
@@ -75,6 +75,7 @@ from ai_metadata_lineage_pyspark_spark.lineage.graphqa import (  # noqa: E402
     column_closure,
     column_edges,
     column_graph,
+    lineage_rows,
 )
 from ai_metadata_lineage_pyspark_spark.lineage.postprocess import (  # noqa: E402
     edges_table,
@@ -98,6 +99,10 @@ ASK_QUESTIONS = (
 
 def _emit(**kv) -> None:
     print(json.dumps(kv), flush=True)
+
+
+def _sha16(text: str) -> str:
+    return hashlib.sha256(text.encode()).hexdigest()[:16]
 
 
 def generate_corpus() -> tuple[str, int, int]:
@@ -237,44 +242,50 @@ def main() -> int:
             "path-disjoint replicas perturbed global column closure"
         )
 
-    # -- Q&A session: the graph preparation, then two asks ---------------
+    # -- Q&A session: two asks, then repeats ----------------------------
     from ai_metadata_lineage_pyspark_spark.ask import QASession
     from ai_metadata_lineage_pyspark_spark.lineage.embed import embed_documents
 
     qa = QASession(columns=columns, edges=edges, assets=assets, corpus=corpus,
                    embedded=embed_documents(corpus).localCheckpoint(eager=True))
-    t0 = time.time()
-    lineage = qa.lineage
-    prepare_s = time.time() - t0
-    t1 = time.time()
-    n_indexed = len(qa.index.ids)
-    index_s = time.time() - t1
-    ask_s = []
-    for q in ASK_QUESTIONS:
-        t1 = time.time()
-        qa.ask(q)
-        ask_s.append(round(time.time() - t1, 2))
-    total_s = time.time() - t0
     sc = spark.sparkContext
+
+    def in_group(group, fn, *args):
+        """fn(*args) under its own job group: its result, wall seconds and
+        the number of Spark jobs it ran."""
+        sc.setJobGroup(group, group)
+        t1 = time.perf_counter()
+        try:
+            out = fn(*args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        wall = time.perf_counter() - t1
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, wall, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    ask_s, ask_jobs, evidence = [], [], []
+    for i, q in enumerate(ASK_QUESTIONS):
+        result, wall, jobs = in_group(f"probe-ask-{i}", qa.ask, q)
+        ask_s.append(round(wall, 2))
+        ask_jobs.append(jobs)
+        evidence.append(_sha16(result["evidence"]))
     retrieve_jobs, refs = [], []
     for i, q in enumerate(ASK_QUESTIONS):
-        group = f"probe-retrieve-{i}"
-        sc.setJobGroup(group, group)
-        refs.append([ref for ref, _ in qa.retrieve(q)])
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        retrieve_jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        hits, _, jobs = in_group(f"probe-retrieve-{i}", qa.retrieve, q)
+        refs.append([ref for ref, _ in hits])
+        retrieve_jobs.append(jobs)
     repeat_ask_s = []
     for q in ASK_QUESTIONS * 10:
         t1 = time.perf_counter()
         qa.ask(q)
         repeat_ask_s.append(time.perf_counter() - t1)
-    _emit(stage="ask", prepare_s=round(prepare_s, 2), index_s=round(index_s, 2),
-          indexed_docs=n_indexed, ask_s=ask_s,
+    _emit(stage="ask", ask_s=ask_s, ask_jobs=ask_jobs,
+          evidence_sha256_16=evidence, indexed_docs=len(qa.index.ids),
           repeat_ask_ms_p50=round(statistics.median(repeat_ask_s) * 1e3, 3),
-          prepare_plus_two_asks_s=round(total_s, 2),
-          known_columns=len(lineage.known), retrieve_jobs=retrieve_jobs,
-          retrieved_sha256_16=hashlib.sha256(json.dumps(refs).encode()).hexdigest()[:16])
+          known_columns=len(qa.lineage.known),
+          lineage_rows=lineage_rows(columns, edges, assets).count(),
+          retrieve_jobs=retrieve_jobs,
+          retrieved_sha256_16=_sha16(json.dumps(refs)))
 
     _emit(stage="summary", scripts=n_scripts, failures=failures,
           ok=not failures)
